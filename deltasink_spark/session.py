@@ -10,6 +10,15 @@ Design notes for 100 TB scale (tested on local[N]):
 - shuffle.partitions defaults to the local core count; on a real
   cluster this is overridden per-job (or left to AQE coalescing from a
   high initial value).
+- Driver heap is sized from the memory this process may use (physical
+  RAM, lowered by a set cgroup limit): heap = 0.75 x memory / 1.4,
+  capped at 16g. 0.75 is Spark's "allocate only at most 75% of the
+  memory for Spark" (Hardware Provisioning guide); 1.4 adds the 0.40
+  ``spark.driver.memoryOverheadFactor`` Spark defaults to for non-JVM
+  (PySpark) jobs on Kubernetes, room for the native and Python-worker
+  memory outside -Xmx. A heap cap above the machine's memory lets G1 grow
+  the heap instead of collecting until the kernel OOM-kills the
+  gateway JVM. ``SPARK_DRIVER_MEM`` overrides the computed value.
 """
 
 from __future__ import annotations
@@ -29,6 +38,40 @@ def local_profile() -> bool:
     return os.environ.get("DS_LOCAL_PROFILE", "1") != "0"
 
 
+_CGROUP_MEMORY_LIMITS = (
+    "/sys/fs/cgroup/memory.max",  # cgroup v2; "max" when unset
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",  # cgroup v1
+)
+_MAX_DRIVER_MIB = 16 * 1024
+
+
+def available_memory_bytes() -> int:
+    """Physical RAM, lowered by this process's cgroup memory limit
+    where one is set. The v2 "max" sentinel is not a number and the v1
+    "unlimited" sentinel (~2**63) exceeds any RAM, so neither lowers
+    the result."""
+    total = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    for path in _CGROUP_MEMORY_LIMITS:
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():
+            total = min(total, int(raw))
+    return total
+
+
+def default_driver_memory(total_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` for a process that may use ``total_bytes``
+    (default: ``available_memory_bytes()``): 0.75 x total / 1.4 in MiB,
+    capped at 16g (see the module docstring)."""
+    if total_bytes is None:
+        total_bytes = available_memory_bytes()
+    mib = total_bytes * 75 // 140 // (1024 * 1024)
+    return f"{min(mib, _MAX_DRIVER_MIB)}m"
+
+
 def get_spark(
     app_name: str = "deltasink_spark",
     cores: int | None = None,
@@ -39,6 +82,7 @@ def get_spark(
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
     if shuffle_partitions is None:
         shuffle_partitions = max(4, cores)
+    driver_memory = os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory()
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
@@ -50,7 +94,7 @@ def get_spark(
         .config("spark.sql.cbo.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
