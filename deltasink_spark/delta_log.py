@@ -48,12 +48,13 @@ actions, never data-proportional work. Parquet CHECKPOINTS
 the last checkpoint and open only the JSON tail after it, keeping
 snapshot construction O(live files + recent commits) at any table age.
 Data-path operations (append, OPTIMIZE rewrite, DELETE/MERGE rewrite)
-are distributed Spark jobs; the driver only moves/renames file
-metadata. DELETE and MERGE rewrite ONLY the files that contain matches
-(found via one predicate-pushed _metadata.file_path scan), the
-copy-on-write DML Delta itself performs; partitioned tables prune from
-add-action partitionValues without listing or opening other
-partitions' files.
+are distributed Spark jobs; the driver only renames the written files
+and reads their parquet footers for the add actions' stats (an append
+is one Spark job: the write). DELETE and MERGE rewrite ONLY the files
+that contain matches (found via one predicate-pushed
+_metadata.file_path scan), the copy-on-write DML Delta itself
+performs; partitioned tables prune from add-action partitionValues
+without listing or opening other partitions' files.
 """
 
 from __future__ import annotations
@@ -333,6 +334,145 @@ _STATS_ATOMIC_TYPES = frozenset(
         "date", "timestamp", "boolean", "decimal",
     }
 )
+
+
+def _spark_decimal(d):
+    """``d`` as Spark's collect() hands a decimal to Python: the JVM
+    pickles the java.math.BigDecimal through toEngineeringString(), so
+    below 1E-6 the coefficient is zero-padded to an exponent that is a
+    multiple of 3 (1E-10 at scale 10 arrives as 1.00E-10). Stats JSON
+    carries str() of the value, so staging stats must match it."""
+    import decimal
+
+    sign, digits, exp = d.as_tuple()
+    adjusted = exp + len(digits) - 1
+    if digits == (0,) or exp >= 0 or adjusted >= -6:
+        return d
+    sig = adjusted % 3 + 1  # integer digits of the engineering form
+    if sig <= len(digits):
+        return d
+    return decimal.Decimal(
+        (sign, digits + (0,) * (sig - len(digits)), adjusted - sig + 1)
+    )
+
+
+def _float_min_max(col) -> tuple:
+    """Spark's min/max of a float/double column: NaN sorts above every
+    number, and on ties (-0.0 == 0.0) the first value in file order
+    wins. Parquet footer stats order neither NaN nor signed zeros that
+    way, so floats are always folded from the column itself."""
+    import numpy as np
+
+    a = col.drop_null().to_numpy()
+    if not len(a):
+        return None, None
+    nan = np.isnan(a)
+    num = a[~nan]
+    if not len(num):
+        return float(a[0]), float(a[0])
+    lo = num[num == num.min()][0]
+    hi = a[nan][0] if nan.any() else num[num == num.max()][0]
+    return float(lo), float(hi)
+
+
+def _footer_min_max(md, i: int, conv) -> tuple | None:
+    """(min, max, nullCount) of leaf column ``i``, folded across the
+    footer's row groups and decoded by ``conv``; None when a row group
+    lacks the stats (parquet-mr omits min/max of a value over 4 KiB,
+    and writes none at all for INT96)."""
+    lo = hi = None
+    nulls = 0
+    for g in range(md.num_row_groups):
+        st = md.row_group(g).column(i).statistics
+        if st is None or not st.has_null_count:
+            return None
+        nulls += st.null_count
+        if st.num_values == 0:  # an all-null row group
+            continue
+        if not st.has_min_max:
+            return None
+        a, b = conv(st.min_raw), conv(st.max_raw)
+        lo = a if lo is None or a < lo else lo
+        hi = b if hi is None or b > hi else hi
+    return lo, hi, nulls
+
+
+def _footer_file_stats(path: str, types: dict) -> dict:
+    """numRecords + per-column min/max/nullCount of one staged parquet
+    file, keyed as the Spark aggregation's row was (``min__c``, ...),
+    with every value typed as collect() would return it. Exact footer
+    stats are taken as they stand; timestamps (INT96 carries none),
+    floats and columns missing footer stats are folded from those
+    columns alone. Raises pyarrow's errors on a file it cannot read
+    (a VARIANT column's logical type, for one)."""
+    import decimal
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import DateType, TimestampType
+
+    pf = pq.ParquetFile(path, coerce_int96_timestamp_unit="us")
+    md = pf.metadata
+    row = {"numRecords": md.num_rows}
+    if not md.num_rows:
+        return row
+    leaf = {}
+    for i in range(md.num_columns):
+        c = md.schema.column(i)
+        if c.path == c.name:  # top-level: matched by physical name
+            leaf[c.name] = i
+    # footer min_raw/max_raw -> the value collect() returns; timestamps
+    # and floats have no exact footer stats and are always scanned
+    exact = {
+        "long": int, "integer": int, "short": int, "byte": int,
+        "boolean": bool, "date": DateType().fromInternal,
+        "string": lambda r: r.decode("utf-8", "replace"),
+    }
+    scan = []
+    for c, dt in types.items():
+        name = dt.typeName()
+        if name == "decimal":
+            def conv(r, s=dt.scale):
+                # INT32/INT64 carry the unscaled int, fixed-length
+                # arrays its big-endian two's complement
+                u = r if isinstance(r, int) else int.from_bytes(
+                    r, "big", signed=True
+                )
+                digits = tuple(map(int, str(abs(u))))
+                return _spark_decimal(decimal.Decimal((int(u < 0), digits, -s)))
+        elif name in exact:
+            conv = exact[name]
+        else:
+            scan.append(c)
+            continue
+        got = _footer_min_max(md, leaf[c], conv) if c in leaf else None
+        if got is None:
+            scan.append(c)
+        else:
+            row[f"min__{c}"], row[f"max__{c}"], row[f"null__{c}"] = got
+    if scan:
+        tbl = pf.read(columns=scan)
+        for c in scan:
+            col = tbl.column(c)
+            name = types[c].typeName()
+            if name in ("double", "float"):
+                lo, hi = _float_min_max(col)
+            else:
+                if name == "timestamp":  # as microseconds since epoch
+                    col = col.cast(pa.timestamp("us", col.type.tz)).cast(
+                        pa.int64()
+                    )
+                mm = pc.min_max(col)
+                lo, hi = mm["min"].as_py(), mm["max"].as_py()
+                if lo is not None and name == "timestamp":
+                    ts = TimestampType().fromInternal
+                    lo, hi = ts(lo), ts(hi)
+                elif lo is not None and name == "decimal":
+                    lo, hi = _spark_decimal(lo), _spark_decimal(hi)
+            row[f"min__{c}"], row[f"max__{c}"] = lo, hi
+            row[f"null__{c}"] = col.null_count
+    return row
 
 
 def _checkpoint_schema(
@@ -2451,11 +2591,14 @@ class DeltaLogTable(_CheckpointMixin):
         stored UNESCAPED (the dir name is Hive-escaped; the protocol
         carries the logical value; NULL is the Hive default-partition
         sentinel -> None). Stats carry numRecords + per-column
-        min/max/nullCount (Delta's file-skipping stats), computed from
-        the written files with one Spark agg grouped by
-        _metadata.file_path — reading back what was written, never
-        re-running the input plan (a nondeterministic upstream must not
-        desync stats from data).
+        min/max/nullCount (Delta's file-skipping stats), taken on the
+        driver from each written file's parquet footer
+        (_footer_file_stats) — what was written, never a re-run of the
+        input plan (a nondeterministic upstream must not desync stats
+        from data), and no Spark job beyond the write itself. Only a
+        file pyarrow cannot open (a VARIANT column) falls back to a
+        Spark agg grouped by _metadata.file_path. A file of 0 rows is
+        deleted and gets no add: an empty frame stages nothing.
 
         COLUMN MAPPING: on a mapped table the parquet files carry
         PHYSICAL column names (the spec's contract — renames never
@@ -2517,8 +2660,8 @@ class DeltaLogTable(_CheckpointMixin):
         # (real Delta's default 32): stats for the first N
         # schema-ordered columns only — min/max on every column of a
         # 1000-column table makes add actions (and the checkpoint)
-        # megabytes per file and the staging agg 3000 expressions
-        # wide, for columns nobody filters on. -1 means all columns.
+        # megabytes per file, for columns nobody filters on. -1 means
+        # all columns.
         # Files stay correct either way: stats are an optimization,
         # read_where_stats scans statless files.
         explicit_stats = self._explicit_stats_columns()
@@ -2548,8 +2691,20 @@ class DeltaLogTable(_CheckpointMixin):
             and f.name in indexed_set
             and f.dataType.typeName() in _STATS_ATOMIC_TYPES
         ]
+        import pyarrow as pa
+
+        types = {c: df.schema[c].dataType for c in atomic}
         stats_rows: dict[str, dict] = {}
-        if written:
+        unreadable: list[str] = []
+        for f in written:
+            try:
+                stats_rows[f] = _footer_file_stats(os.path.join(tmp, f), types)
+            except (OSError, pa.ArrowException):
+                unreadable.append(f)
+        if unreadable:
+            # files pyarrow cannot open (a VARIANT column's logical
+            # type): one Spark agg over just those, grouped by file;
+            # a file with no group has no rows
             aggs = [F.count(F.lit(1)).alias("numRecords")]
             for c in atomic:
                 aggs += [
@@ -2558,17 +2713,33 @@ class DeltaLogTable(_CheckpointMixin):
                     F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"null__{c}"),
                 ]
             per_file = (
-                spark.read.parquet(tmp)
+                spark.read.option("basePath", tmp)
+                .parquet(*[os.path.join(tmp, f) for f in unreadable])
                 .groupBy(F.col("_metadata.file_path").alias("fp"))
                 .agg(*aggs)
                 .collect()
             )
+            for f in unreadable:
+                stats_rows[f] = {"numRecords": 0}
             for r in per_file:
                 d = r.asDict()
                 p = urllib.parse.unquote(urllib.parse.urlparse(d["fp"]).path)
                 stats_rows[os.path.relpath(p, tmp)] = d
+
+        def _j(v):
+            if v is None:
+                return None
+            if hasattr(v, "isoformat"):
+                return v.isoformat()
+            if isinstance(v, (int, float, bool, str)):
+                return v
+            return str(v)
+
         adds = []
         for f in sorted(written):
+            srow = stats_rows[f]
+            if not srow["numRecords"]:
+                continue  # no empty data files: tmp's removal drops it
             part_dir = os.path.dirname(f)  # e.g. "event_type=view" or ""
             pvals: dict[str, str | None] = {}
             for seg in part_dir.split(os.sep) if part_dir else []:
@@ -2593,36 +2764,23 @@ class DeltaLogTable(_CheckpointMixin):
             os.makedirs(os.path.dirname(dst), exist_ok=True)
             st_size = os.path.getsize(src)
             os.rename(src, dst)
-            srow = stats_rows.get(f)
-            stats = None
-            if srow is not None:
-                def _j(v):
-                    if v is None:
-                        return None
-                    if hasattr(v, "isoformat"):
-                        return v.isoformat()
-                    if isinstance(v, (int, float, bool, str)):
-                        return v
-                    return str(v)
-
-                stats = json.dumps(
-                    {
-                        "numRecords": srow["numRecords"],
-                        "minValues": {c: _j(srow[f"min__{c}"]) for c in atomic},
-                        "maxValues": {c: _j(srow[f"max__{c}"]) for c in atomic},
-                        "nullCount": {c: srow[f"null__{c}"] for c in atomic},
-                    }
-                )
-            add = {
-                "path": logged,
-                "partitionValues": pvals,
-                "size": st_size,
-                "modificationTime": _now_ms(),
-                "dataChange": True,
-            }
-            if stats is not None:
-                add["stats"] = stats
-            adds.append(add)
+            adds.append(
+                {
+                    "path": logged,
+                    "partitionValues": pvals,
+                    "size": st_size,
+                    "modificationTime": _now_ms(),
+                    "dataChange": True,
+                    "stats": json.dumps(
+                        {
+                            "numRecords": srow["numRecords"],
+                            "minValues": {c: _j(srow[f"min__{c}"]) for c in atomic},
+                            "maxValues": {c: _j(srow[f"max__{c}"]) for c in atomic},
+                            "nullCount": {c: srow[f"null__{c}"] for c in atomic},
+                        }
+                    ),
+                }
+            )
         shutil.rmtree(tmp, ignore_errors=True)
         return adds
 

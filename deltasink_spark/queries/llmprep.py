@@ -352,7 +352,9 @@ def min_label_components(pairs, stats: dict | None = None):
             .localCheckpoint(eager=False)
         )
         # limit(1): stop at the first differing pair. This action also
-        # materializes the checkpoint, so the round stays ONE job.
+        # starts materializing the checkpoint, but CollectLimit scans
+        # incrementally: an early hit may leave some of merged's
+        # partitions to the next round's job, which computes them then.
         changed = (
             merged.filter(F.col("n") != F.col("o")).limit(1).count()
         )

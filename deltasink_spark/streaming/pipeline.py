@@ -23,16 +23,26 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 def parse_kafka_json(records: DataFrame, payload_schema: str) -> DataFrame:
     """Stage 2 of the ingest loop: deserialize value bytes -> JSON struct
-    (PERMISSIVE: malformed -> null struct, routed to dead-letter), keep
-    ingest metadata columns, derive the date partition column."""
-    parsed = F.from_json(F.col("value").cast("string"), payload_schema)
+    (PERMISSIVE: a malformed payload parses to null fields and
+    ``parse_ok`` false, for dead-letter routing), keep ingest metadata
+    columns, derive the date partition column. Spark 4's from_json
+    returns a struct of nulls, not null, for a malformed document, so
+    the flag comes from a corrupt-record field, dropped from
+    ``payload``."""
+    parsed = F.from_json(
+        F.col("value").cast("string"),
+        f"{payload_schema}, _corrupt_record string",
+        {"columnNameOfCorruptRecord": "_corrupt_record"},
+    )
     return records.select(
         F.col("topic"),
         F.col("partition"),
         F.col("offset"),
         F.col("timestamp").alias("ingest_ts"),
-        parsed.alias("payload"),
-        parsed.isNotNull().alias("parse_ok"),
+        parsed.dropFields("_corrupt_record").alias("payload"),
+        (F.col("value").isNotNull() & parsed["_corrupt_record"].isNull()).alias(
+            "parse_ok"
+        ),
         F.to_date(F.date_trunc("day", F.col("timestamp"))).alias("dt"),
     )
 

@@ -5167,3 +5167,194 @@ def test_expire_prunes_metadata_log(spark, tmp_path):
     assert sum(
         f["record_count"] for f in read_iceberg_live_files(t.path)
     ) == 50
+
+
+def _agg_stats_json(spark, path: str, cols: list[str]) -> str:
+    """The per-file Spark aggregation staging stats came from before
+    footers: min/max/nullCount through collect(), JSON-encoded as the
+    add action's `stats` string."""
+
+    def j(v):
+        if v is None:
+            return None
+        if hasattr(v, "isoformat"):
+            return v.isoformat()
+        if isinstance(v, (int, float, bool, str)):
+            return v
+        return str(v)
+
+    r = spark.read.parquet(path).agg(
+        F.count(F.lit(1)),
+        *[F.min(c) for c in cols],
+        *[F.max(c) for c in cols],
+        *[F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)) for c in cols],
+    ).first()
+    n = len(cols)
+    return json.dumps(
+        {
+            "numRecords": r[0],
+            "minValues": {c: j(r[1 + i]) for i, c in enumerate(cols)},
+            "maxValues": {c: j(r[1 + n + i]) for i, c in enumerate(cols)},
+            "nullCount": {c: r[1 + 2 * n + i] for i, c in enumerate(cols)},
+        }
+    )
+
+
+def _assert_stats_parity(spark, t: DeltaLogTable, n_cols: int) -> dict:
+    adds = t.snapshot_adds()
+    for p, a in adds.items():
+        cols = list(json.loads(a["stats"])["minValues"])
+        assert len(cols) == n_cols, (p, cols)
+        want = _agg_stats_json(spark, t._abs_of_add_path(p), cols)
+        assert a["stats"] == want, p
+    return adds
+
+
+_PARITY_SCHEMA = (
+    "l long, i int, s short, b byte, d double, f float, st string, "
+    "dt date, ts timestamp, bo boolean, d1 decimal(5,2), "
+    "d2 decimal(15,4), d3 decimal(25,10), d4 decimal(38,18), nul int"
+)
+
+
+def _parity_rows():
+    import datetime as dtm
+    from decimal import Decimal
+
+    nan, inf = float("nan"), float("inf")
+    base = [
+        # double, float: ties of -0.0 and 0.0 in both orders, NaN
+        # above every number, infinities, an all-NaN file below
+        (-0.0, -0.0), (0.0, 0.0), (nan, 1.5), (-inf, 0.1), (inf, -2.5),
+        (None, None), (0.0, 0.0), (-0.0, -0.0), (1e-300, 3.4e38),
+    ]
+    strings = ["é", "a", "日本", "￮", "😀", "", None, "zz", "Ab"]
+    rows = []
+    for k, (d, f) in enumerate(base):
+        rows.append(
+            (
+                k * 10**12 - 7, -k, k - 4, 3 - k, d, f, strings[k],
+                dtm.date(1500 + 60 * k, 1 + k, 1),
+                # INT96 timestamps, the first ones before 1900
+                dtm.datetime(1850 + 30 * k, 3, 1, 12, 0, 0, 123456 * k % 10**6),
+                k % 2 == 0,
+                Decimal(k * 37 - 150) / 100,
+                Decimal(-k * 12345) / 10**4,
+                Decimal(k - 4) / 10**10,
+                Decimal(10**19 + k) / 10**18,
+                None,
+            )
+        )
+    return rows
+
+
+def test_stats_from_footers_match_spark_aggregation(spark, tmp_path):
+    """Staged add actions' stats, now read from parquet footers (and a
+    pyarrow fold of the columns footers do not cover exactly), are
+    byte-identical to the per-file Spark aggregation they replace —
+    every stats type, NaN and signed-zero doubles, an all-null column,
+    INT32 / INT64 / fixed-length decimals, INT96 timestamps before
+    1900, non-ASCII and over-4-KiB strings, multi-row-group files,
+    and partitioned and column-mapped tables."""
+    import pyarrow.parquet as pq
+
+    from deltasink_spark.delta_log import _STATS_ATOMIC_TYPES
+
+    rows = _parity_rows()
+    frame = spark.createDataFrame(rows, _PARITY_SCHEMA)
+    types = {f.dataType.typeName() for f in frame.schema.fields}
+    assert types == _STATS_ATOMIC_TYPES
+    t = _table(tmp_path, "plain")
+    # one file per append, rows in the listed order
+    for lo in range(0, len(rows), 2):
+        t.append(spark.createDataFrame(rows[lo:lo + 2], _PARITY_SCHEMA).coalesce(1))
+    nan_rows = [r[:4] + (float("nan"), float("nan")) + r[6:] for r in rows[:3]]
+    t.append(spark.createDataFrame(nan_rows, _PARITY_SCHEMA).coalesce(1))
+    long_rows = [r[:6] + ("x" * 5000,) + r[7:] for r in rows[2:4]]
+    t.append(spark.createDataFrame(long_rows, _PARITY_SCHEMA).coalesce(1))
+    adds = _assert_stats_parity(spark, t, len(frame.columns))
+    stats = [json.loads(a["stats"]) for a in adds.values()]
+    assert sorted(s["numRecords"] for s in stats) == [1, 2, 2, 2, 2, 2, 3]
+    # ties keep the first value of the file: [-0.0, 0.0] and [0.0, -0.0]
+    ties = {
+        s["maxValues"]["l"]: str((s["minValues"]["d"], s["maxValues"]["f"]))
+        for s in stats
+    }
+    assert ties[10**12 - 7] == "(-0.0, -0.0)"
+    assert ties[7 * 10**12 - 7] == "(0.0, 0.0)"
+    # a multi-row-group file (a tiny parquet block size), timestamps
+    # stored as INT64 milliseconds rather than INT96
+    spark.conf.set("parquet.block.size", "1024")
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MILLIS")
+    try:
+        big = _table(tmp_path, "groups")
+        big.append(
+            spark.range(3000).selectExpr(
+                "id AS l", "cast(id % 1000 AS int) AS i",
+                "cast(id AS double) / 7 AS d", "cast(id AS string) AS st",
+                "cast(id AS decimal(25,10)) / 3 AS d3",
+                "timestamp_seconds(id * 86400 - 4000000000) AS ts",
+            ).coalesce(1)
+        )
+    finally:
+        spark.conf.unset("parquet.block.size")
+        spark.conf.unset("spark.sql.parquet.outputTimestampType")
+    (p,) = big.snapshot_adds()
+    md = pq.ParquetFile(big._abs_of_add_path(p)).metadata
+    assert md.num_row_groups > 1
+    assert md.schema.column(5).physical_type == "INT64"
+    _assert_stats_parity(spark, big, 6)
+    # partitioned: partition columns carry no stats
+    part = _table(tmp_path, "part")
+    part.append(
+        frame.coalesce(1).withColumn("p", F.col("i") % 3), partition_by=("p",)
+    )
+    assert len(_assert_stats_parity(spark, part, len(frame.columns))) == 3
+    # column-mapped: stats keys and footer columns are physical names
+    cm = _table(tmp_path, "cm")
+    cm.append(frame.coalesce(1), column_mapping_mode="id")
+    (a,) = _assert_stats_parity(spark, cm, len(frame.columns)).values()
+    assert set(json.loads(a["stats"])["minValues"]) == set(
+        cm.column_mapping().values()
+    )
+
+
+def test_append_to_existing_table_runs_one_spark_job(spark, tmp_path):
+    """An append's only Spark job is the data write: staging stats come
+    from the written files' footers, not a read-back job."""
+    import uuid as _uuid
+
+    t = _table(tmp_path)
+    t.append(_ev(spark))
+    sc = spark.sparkContext
+    group = f"append-{_uuid.uuid4().hex}"
+    sc.setJobGroup(group, "append")
+    try:
+        assert t.append(_ev(spark, 50)) == 1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+def test_empty_append_commits_no_data_file(spark, tmp_path):
+    """A no-data micro-batch commits its txn (and commitInfo) but no add
+    and leaves no file behind; an empty first append still creates the
+    table, and it reads as an empty frame with its schema."""
+    t = _table(tmp_path)
+    empty = _ev(spark).limit(0)
+    assert t.append(empty, "app", 0) == 0
+    assert t.snapshot_adds() == {}
+    got = t.read(spark)
+    assert got.columns == ["event_id", "user_id", "value"] and got.count() == 0
+    assert t.append(_ev(spark), "app", 1) == 1
+    assert t.append(empty, "app", 2) == 2
+    assert t.txn_versions(refresh=True)["app"] == 2
+    actions = [
+        next(iter(json.loads(line)))
+        for line in open(os.path.join(t.log_dir, f"{2:020d}.json"))
+    ]
+    assert actions == ["txn", "commitInfo"]
+    assert len(t.snapshot_adds()) == len(
+        [f for f in os.listdir(t.path) if f.endswith(".parquet")]
+    )
+    assert t.read(spark).count() == 100

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from deltasink_spark.sinks import ExactlyOnceParquetSink
 from deltasink_spark.streaming.pipeline import (
     dedup_within_watermark,
+    parse_kafka_json,
     run_to_memory,
     running_totals_stateful,
     tumbling_counts,
@@ -62,6 +63,46 @@ def _ts(s):
     import datetime as dt
 
     return dt.datetime.fromisoformat(s)
+
+
+def test_parse_kafka_json_flags_malformed_payloads(spark):
+    """parse_ok is false for truncated and non-JSON payloads (and a null
+    value), true for any well-formed document, `{}` included; the
+    payload struct keeps exactly the declared fields."""
+    import datetime
+
+    values = [
+        b'{"k": 1, "s": "a"}',
+        b'{"k": 2, "s": "b',
+        b"not json",
+        b"{}",
+        None,
+        b'{"k": 5}',
+    ]
+    records = spark.createDataFrame(
+        [
+            (v, "events", 0, i, datetime.datetime(2024, 1, 1))
+            for i, v in enumerate(values)
+        ],
+        "value binary, topic string, partition int, offset bigint, "
+        "timestamp timestamp",
+    )
+    out = parse_kafka_json(records, "k bigint, s string")
+    assert out.schema["payload"].dataType.simpleString() == (
+        "struct<k:bigint,s:string>"
+    )
+    got = {
+        r["offset"]: (r["parse_ok"], r["payload"] and r["payload"]["k"])
+        for r in out.collect()
+    }
+    assert got == {
+        0: (True, 1),
+        1: (False, None),
+        2: (False, None),
+        3: (True, None),
+        4: (False, None),
+        5: (True, 5),
+    }
 
 
 def test_watermark_drops_late_rows(spark, tmp_path):
