@@ -776,13 +776,11 @@ def dq_referential_integrity(spark, sf_dir):
     join against the (unique, primary-key) parent keys preserves the
     child's row count, so n_child and n_orphans come out of the same
     combining agg (an anti-join formulation would scan the child a
-    second time for n_child). The genuinely dim-sized parents (part,
-    supplier, customer) carry an explicit broadcast hint — at scale
-    their key projections stay broadcastable while size ESTIMATES
-    after projection are unreliable (guide §3.1); orders is fact-sized
-    (same cardinality class as lineitem) and is left to the planner,
-    which picks broadcast at fixture scale and a shuffle join when it
-    outgrows the threshold. No windows, no driver-side row handling."""
+    second time for n_child). Every parent (customer, orders, part,
+    supplier) grows with the scale factor, so none carries a broadcast
+    hint: the planner picks broadcast at fixture scale and a shuffle
+    join once a parent outgrows the threshold. No windows, no
+    driver-side row handling."""
     def orphan_sum(hit):
         # empty child: the ungrouped SUM is NULL where the oracle's
         # COUNT subquery is 0 (the r8 audit's global-agg-on-empty
@@ -796,7 +794,7 @@ def dq_referential_integrity(spark, sf_dir):
 
     # orders->customer: one orders pass, one left join, one agg.
     oc_child = load(spark, sf_dir, "orders").select(F.col("o_custkey").alias("k"))
-    oc_parent = F.broadcast(
+    oc_parent = (
         load(spark, sf_dir, "customer")
         .select(F.col("c_custkey").alias("k"))
         .withColumn("hit", F.lit(1))
@@ -824,20 +822,18 @@ def dq_referential_integrity(spark, sf_dir):
         "l_orderkey", "l_partkey", "l_suppkey"
     )
     parents = [
-        # orders is fact-sized: no hint, the planner decides (broadcast
-        # at fixture scale, shuffle join once it outgrows the threshold)
-        ("l_orderkey", "orders", "o_orderkey", "hit_o", False),
-        ("l_partkey", "part", "p_partkey", "hit_p", True),
-        ("l_suppkey", "supplier", "s_suppkey", "hit_s", True),
+        ("l_orderkey", "orders", "o_orderkey", "hit_o"),
+        ("l_partkey", "part", "p_partkey", "hit_p"),
+        ("l_suppkey", "supplier", "s_suppkey", "hit_s"),
     ]
     j = li
-    for ck, parent, pk, hit, is_dim in parents:
+    for ck, parent, pk, hit in parents:
         p = (
             load(spark, sf_dir, parent)
             .select(F.col(pk).alias(ck))
             .withColumn(hit, F.lit(1))
         )
-        j = j.join(F.broadcast(p) if is_dim else p, ck, "left")
+        j = j.join(p, ck, "left")
     agg = j.groupBy().agg(
         F.count(F.lit(1)).cast("long").alias("n_child"),
         orphan_sum("hit_o").alias("orph_o"),

@@ -228,6 +228,91 @@ def test_streaming_sink_replay_via_txn(spark, tmp_path, sf_small):
     assert sink.table.read(spark).count() == expected
 
 
+def test_checkpoint_integrity_across_dedup_drains(spark, tmp_path):
+    """Two availableNow drains on one checkpoint, file stream ->
+    dedup_within_watermark -> DeltaLogSink, written by the session's
+    FileSystem-based checkpoint manager: every key lands once (the
+    redelivered ones too, across the restart), the txn high-water mark
+    is the last batch id, the second drain resumes at the next batch id
+    and no rename temp file is left under the checkpoint."""
+    import datetime as dt
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from deltasink_spark.session import CHECKPOINT_FILE_MANAGER
+    from deltasink_spark.streaming.pipeline import dedup_within_watermark
+
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    assert spark.conf.get(key) == CHECKPOINT_FILE_MANAGER
+    src = tmp_path / "src"
+    src.mkdir()
+    ckpt = str(tmp_path / "ckpt")
+    t0 = dt.datetime(2024, 1, 1, 10, tzinfo=dt.timezone.utc)
+
+    def stage(i, ids):
+        # one file per micro-batch, discovered in mtime order
+        path = str(src / f"batch_{i}.parquet")
+        ts = [t0 + dt.timedelta(minutes=k) for k in ids]
+        pq.write_table(
+            pa.table(
+                {
+                    "event_id": pa.array(ids, pa.int64()),
+                    "ts": pa.array(ts, pa.timestamp("us", tz="UTC")),
+                    "value": pa.array([k * 1.5 for k in ids], pa.float64()),
+                }
+            ),
+            path,
+        )
+        mtime = time.time() + i * 10
+        os.utime(path, (mtime, mtime))
+
+    sink = DeltaLogSink(str(tmp_path / "sink"), app_id="t_ckpt")
+    seen: list[int] = []
+
+    def write(df, batch_id):
+        seen.append(batch_id)
+        sink.write_batch(df, batch_id)
+
+    def drain() -> list[int]:
+        start = len(seen)
+        stream = (
+            spark.readStream.schema("event_id long, ts timestamp, value double")
+            .option("maxFilesPerTrigger", "1")
+            .parquet(str(src))
+        )
+        q = (
+            dedup_within_watermark(stream, ["event_id"], "ts", "1 hour")
+            .writeStream.foreachBatch(write)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return seen[start:]
+
+    stage(0, list(range(10)))
+    stage(1, list(range(5, 20)))  # 5..9 redelivered
+    first = drain()
+    stage(2, list(range(15, 30)))  # 15..19 redelivered after the restart
+    second = drain()
+
+    assert first and second and second[0] == first[-1] + 1
+    ids = [r["event_id"] for r in sink.table.read(spark).select("event_id").collect()]
+    assert sorted(ids) == list(range(30))
+    assert sink.table.txn_versions(refresh=True)["t_ckpt"] == second[-1]
+
+    def logged(sub):
+        return max(int(f) for f in os.listdir(os.path.join(ckpt, sub)) if f.isdigit())
+
+    assert logged("offsets") == logged("commits") == second[-1]
+    leftovers = [
+        os.path.join(d, f) for d, _, files in os.walk(ckpt) for f in files if ".tmp" in f
+    ]
+    assert leftovers == []
+
+
 def test_add_stats_carry_numrecords_and_minmax(spark, tmp_path):
     t = _table(tmp_path)
     t.append(_ev(spark, 25))

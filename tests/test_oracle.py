@@ -8,9 +8,12 @@ and the default sweep is ~800 of them — run sequentially they took
 budget. The Spark side of every collected test is therefore
 precomputed ONCE per session by a small driver-side thread pool
 (actions from independent ops overlap; Spark's scheduler is built for
-concurrent jobs and all fixture state is per-op — the only catalog
-writer, join_bucketed's bucketed tables, is keyed per sf_dir and runs
-inside a single future). Each test then performs its DuckDB run and
+concurrent jobs and all fixture state is per-op). Each op gets ONE
+future that computes all of its kinds in sequence, so no op runs
+concurrently with itself: join_bucketed, the only catalog writer, has
+an oracle and is collected under both "rows" and "pdf", and its
+non-atomic tableExists/saveAsTable guard would race if the two kinds
+ran in parallel. Each test then performs its DuckDB run and
 the comparison itself, so failure attribution, -x semantics and -k
 subsetting (only collected ops are precomputed) are unchanged.
 """
@@ -79,12 +82,18 @@ def _precompute(spark, sf_oracle, want) -> None:
         except Exception as exc:  # re-raised inside the consuming test
             return (kind, op), ("err", exc)
 
-    jobs = [(kind, op) for kind, ops in sorted(want.items()) for op in sorted(ops)]
+    def run_op(op, kinds):
+        return [run(kind, op) for kind in kinds]
+
+    by_op: dict[str, list[str]] = {}
+    for kind, ops in sorted(want.items()):
+        for op in ops:
+            by_op.setdefault(op, []).append(kind)
     with ThreadPoolExecutor(max_workers=12) as pool:
-        futs = [pool.submit(run, kind, op) for kind, op in jobs]
+        futs = [pool.submit(run_op, op, kinds) for op, kinds in sorted(by_op.items())]
         for f in futs:
-            key, res = f.result()
-            _PRE[key] = res
+            for key, res in f.result():
+                _PRE[key] = res
 
 
 @pytest.fixture(scope="session")

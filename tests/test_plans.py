@@ -1259,6 +1259,21 @@ def test_referential_integrity_single_pass_left_joins(spark, sf_small):
     assert "LeftAnti" not in p
 
 
+def test_referential_integrity_parents_are_not_forced_to_broadcast(spark, sf_small):
+    """customer, orders, part and supplier all grow with the scale
+    factor, so the planner decides their joins: with broadcasting off,
+    no parent is broadcast by a hint."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        p = plan(q("dq_referential_integrity", spark, sf_small), "simple")
+    finally:
+        spark.conf.set(key, old)
+    assert "BroadcastHashJoin" not in p
+    assert "LeftOuter" in p
+
+
 def test_join_size_estimate_sample_path_shapes(spark, sf_small):
     """The estimator is two hash aggs + one sample-sized equi-join;
     the true-size frame glues on as a 1-row broadcast — no cartesian,

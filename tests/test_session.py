@@ -1,7 +1,8 @@
-"""Driver-heap sizing in ``get_spark``, checked without starting Spark.
+"""Driver-heap sizing and the local-profile streaming checkpoint manager
+in ``get_spark``, checked without starting Spark.
 
-The rule (session module docstring): heap = 0.75 x available memory / 1.4,
-capped at 16g, with ``SPARK_DRIVER_MEM`` as an explicit override."""
+The heap rule (session module docstring): heap = 0.75 x available memory
+/ 1.4, capped at 16g, with ``SPARK_DRIVER_MEM`` as an explicit override."""
 
 from __future__ import annotations
 
@@ -79,11 +80,15 @@ class _FakeBuilder:
         pass
 
 
-def _driver_memory_passed(monkeypatch) -> str:
+def _conf_passed(monkeypatch) -> dict[str, str]:
     fake = _FakeBuilder()
     monkeypatch.setattr(session.SparkSession, "builder", fake)
     session.get_spark(cores=1)
-    return fake.conf["spark.driver.memory"]
+    return fake.conf
+
+
+def _driver_memory_passed(monkeypatch) -> str:
+    return _conf_passed(monkeypatch)["spark.driver.memory"]
 
 
 def test_get_spark_passes_the_computed_heap(monkeypatch):
@@ -96,3 +101,19 @@ def test_spark_driver_mem_overrides_the_computed_heap(monkeypatch):
     monkeypatch.setenv("SPARK_DRIVER_MEM", "3g")
     monkeypatch.setattr(session, "available_memory_bytes", lambda: 16_874_930_176)
     assert _driver_memory_passed(monkeypatch) == "3g"
+
+
+_CKPT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def test_local_profile_writes_checkpoints_through_filesystem(monkeypatch):
+    monkeypatch.delenv("DS_LOCAL_PROFILE", raising=False)
+    assert _conf_passed(monkeypatch)[_CKPT_MANAGER_KEY] == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+
+
+def test_cluster_profile_keeps_the_default_checkpoint_manager(monkeypatch):
+    monkeypatch.setenv("DS_LOCAL_PROFILE", "0")
+    assert _CKPT_MANAGER_KEY not in _conf_passed(monkeypatch)
