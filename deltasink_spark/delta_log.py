@@ -43,10 +43,16 @@ idempotence design — foreachBatch skips a batch when its batch_id is
 is a no-op; see DeltaLogSink.
 
 Scale: the log is METADATA — commits append O(files-touched) JSON
-actions, never data-proportional work. Parquet CHECKPOINTS
-(_CheckpointMixin) bound log replay: snapshot and txn folds start from
-the last checkpoint and open only the JSON tail after it, keeping
-snapshot construction O(live files + recent commits) at any table age.
+actions, never data-proportional work. The table's state lives in ONE
+snapshot per version (_Snapshot: protocol, metaData, txn marks,
+domains, live adds, tombstones, last commitInfo), built by one fold
+from the last parquet CHECKPOINT (_CheckpointMixin) plus the JSON tail
+after it — O(live files + recent commits) at any table age — and the
+same fold feeds the checkpoint writers. A table handle caches its
+snapshot keyed on the `_delta_log` listing: each state read lists the
+log once and reuses the snapshot, folds only the new commits on top
+of it, or (after a checkpoint, a compaction or a deleted commit)
+refolds from the checkpoint; a commit reads back one JSON file.
 Data-path operations (append, OPTIMIZE rewrite, DELETE/MERGE rewrite)
 are distributed Spark jobs; the driver only renames the written files
 and reads their parquet footers for the add actions' stats (an append
@@ -60,10 +66,13 @@ without listing or opening other partitions' files.
 from __future__ import annotations
 
 import contextlib
+import copy
+import dataclasses
 import fcntl
 import functools
 import json
 import os
+import re
 import shutil
 import time
 import urllib.parse
@@ -674,6 +683,47 @@ def _checkpoint_schema(
 # than this age out of newly-written checkpoints (vacuum past it can no
 # longer see the file — real Delta's documented retention tradeoff)
 _TOMBSTONE_RETENTION_MS = 7 * 24 * 3600 * 1000
+
+_COMPACTED_RE = re.compile(r"^(\d{20})\.(\d{20})\.compacted\.json$")
+
+
+def _is_commit_file(name: str) -> bool:
+    return len(name) == 25 and name.endswith(".json")
+
+
+def _is_state_file(name: str) -> bool:
+    """A `_delta_log` entry whose arrival or loss can change the folded
+    state: a JSON commit, a compacted segment or a checkpoint file.
+    `.crc` sidecars, `_last_checkpoint` and temp files are not."""
+    return (
+        _is_commit_file(name)
+        or _COMPACTED_RE.match(name) is not None
+        or (
+            name[:20].isdigit()
+            and name[20:32] == ".checkpoint."
+            and name.endswith(".parquet")
+        )
+    )
+
+
+@dataclasses.dataclass(frozen=True)
+class _Snapshot:
+    """The table's state at one version: the last checkpoint plus the
+    JSON tail after it, folded once (DeltaLogTable._fold). ``key`` is
+    the (name, size, mtime) of every state file the fold was listed
+    from (DeltaLogTable._listing_key). The dicts
+    are never handed out — accessors return copies — so no caller can
+    poison a cached snapshot."""
+
+    version: int
+    key: frozenset
+    protocol: dict | None
+    metadata: dict | None
+    txns: dict  # appId -> highest txn version
+    domains: dict  # domain -> latest domainMetadata action (removed too)
+    adds: dict  # path -> live add action, in first-add order
+    removes: dict  # path -> latest remove action (re-adds keep it)
+    commit_info: dict | None  # the newest version's commitInfo
 
 
 class LogStore:
@@ -1328,54 +1378,24 @@ class _CheckpointMixin:
         )
 
     def _checkpoint_fold_rows(self):
-        """The reconstructed state at the current version as checkpoint
-        ROWS, split into non-file actions (protocol, metaData, txn —
-        a v2 checkpoint's top-level file must carry these) and file
-        actions (add + unexpired remove tombstones — sidecar-able).
-        Shared by the classic and v2 writers."""
-        v = self.latest_version()
-        if v < 0:
+        """The current snapshot as checkpoint ROWS, split into non-file
+        actions (protocol, metaData, txn — a v2 checkpoint's top-level
+        file must carry these) and file actions (add + unexpired remove
+        tombstones — sidecar-able). Shared by the classic and v2
+        writers."""
+        s = self._snapshot()
+        if s.version < 0:
             raise ValueError("cannot checkpoint an empty log")
-        # ONE fold: the previous checkpoint's full state (one parquet
-        # read per part) + one pass over the JSON tail collecting meta,
-        # proto, txns, adds and removes together — the per-column
-        # helpers would each re-open every part and re-parse the tail
-        meta = None
-        proto = None
-        adds: dict[str, dict] = {}
-        removes: dict[str, dict] = {}
-        txns: dict[str, int] = {}
-        doms: dict[str, dict] = {}
-        start = 0
-        pcv = self.last_checkpoint()
-        if pcv is not None and pcv <= v:
-            st = self._checkpoint_state(pcv)
-            meta, proto, txns = st["meta"], st["proto"], st["txns"]
-            adds, removes = st["adds"], st["removes"]
-            doms = dict(st.get("doms") or {})
-            start = pcv + 1
-        for _, a in self._actions(v, from_version=start):
-            if "add" in a:
-                adds[a["add"]["path"]] = a["add"]
-                removes.pop(a["add"]["path"], None)
-            elif "remove" in a:
-                adds.pop(a["remove"]["path"], None)
-                removes[a["remove"]["path"]] = a["remove"]
-            elif "metaData" in a:
-                meta = a["metaData"]
-            elif "protocol" in a:
-                proto = a["protocol"]
-            elif "txn" in a:
-                t = a["txn"]
-                txns[t["appId"]] = max(txns.get(t["appId"], -1), t["version"])
-            elif "domainMetadata" in a:
-                doms[a["domainMetadata"]["domain"]] = a["domainMetadata"]
-        # spec: retain UNEXPIRED tombstones only — older ones age out
+        meta, proto, txns, doms, adds = (
+            s.metadata, s.protocol, s.txns, s.domains, s.adds
+        )
+        # spec: retain UNEXPIRED tombstones of files that are not live
+        # again — older ones age out
         cutoff = _now_ms() - _TOMBSTONE_RETENTION_MS
         removes = {
             p: r
-            for p, r in removes.items()
-            if (r.get("deletionTimestamp") or 0) >= cutoff
+            for p, r in s.removes.items()
+            if p not in adds and (r.get("deletionTimestamp") or 0) >= cutoff
         }
         nonfile: list[dict] = []
         if proto is not None:
@@ -1453,7 +1473,7 @@ class _CheckpointMixin:
                     }
                 }
             )
-        return v, nonfile, file_rows
+        return s.version, nonfile, file_rows
 
     def checkpoint_v2(self, sidecars: int = 2) -> int:
         """Write a V2 CHECKPOINT (the spec's `v2Checkpoint` table
@@ -1553,8 +1573,6 @@ class _CheckpointMixin:
             raise MetadataChangedError(
                 "protocol changed while enabling v2Checkpoint; retry"
             )
-        self._read_proto_ok = False  # re-gate with the new protocol
-        self._write_proto_ok = False
         return v
 
     def _last_checkpoint_info(self) -> dict | None:
@@ -1639,34 +1657,10 @@ class _CheckpointMixin:
                     out.append(os.path.join(self.log_dir, "_sidecars", p))
         return out
 
-    def _checkpoint_adds(self, cv: int) -> dict[str, dict]:
-        """path -> add action from the checkpoint parquet(s) at ``cv``
-        (classic parts, or a v2 top-level + its sidecars)."""
-        import pyarrow.parquet as pq
-
-        out: dict[str, dict] = {}
-        for cp in self._checkpoint_file_action_paths(cv):
-            if "add" not in pq.ParquetFile(cp).schema_arrow.names:
-                continue
-            for rec in (
-                pq.read_table(cp, columns=["add"]).column("add").to_pylist()
-            ):
-                if rec is not None:
-                    rec = dict(rec)
-                    rec["partitionValues"] = dict(rec.get("partitionValues") or [])
-                    for k in ("deletionVector", "baseRowId",
-                              "defaultRowCommitVersion"):
-                        if rec.get(k) is None:
-                            rec.pop(k, None)
-                    out[rec["path"]] = rec
-        return out
-
     def _checkpoint_state(self, cv: int) -> dict:
         """The FULL reconstructed state of the checkpoint at ``cv`` —
-        meta, proto, txns, adds, removes — from ONE parquet read per
-        part. checkpoint() needs all five: folding them through the
-        per-column helpers would open every part (and then the JSON
-        tail) once per column."""
+        meta, proto, txns, domains, adds, removes — from ONE parquet
+        read per part: the base every snapshot fold starts from."""
         import pyarrow.parquet as pq
 
         meta = None
@@ -1739,48 +1733,14 @@ class _CheckpointMixin:
             "doms": doms,
         }
 
-    def _checkpoint_removes(self, cv: int) -> dict[str, dict]:
-        """path -> remove tombstone from the checkpoint parquet(s) at
-        ``cv`` (empty for checkpoints written before the column
-        existed)."""
-        import pyarrow.parquet as pq
-
-        out: dict[str, dict] = {}
-        for cp in self._checkpoint_file_action_paths(cv):
-            f = pq.ParquetFile(cp)
-            if "remove" not in f.schema_arrow.names:
-                continue
-            for rec in (
-                pq.read_table(cp, columns=["remove"]).column("remove").to_pylist()
-            ):
-                if rec is not None:
-                    rec = {k: v for k, v in rec.items() if v is not None}
-                    out[rec["path"]] = rec
-        return out
-
     def read_via_checkpoint(self, spark):
         """Snapshot read that starts from the checkpoint instead of
-        folding the whole JSON log: load the checkpoint's add set, then
-        open and apply ONLY the commits AFTER it (pre-checkpoint JSON
-        files are never even opened — the bounded replay every
-        long-lived Delta table depends on). Verified equal to the full
-        JSON fold by scan_delta_log_checkpoint's independent oracle."""
-        self._check_read_protocol()
-        cv = self.last_checkpoint()
-        if cv is None:
-            return self.read(spark)
-        live = self._checkpoint_adds(cv)
-        for _, a in self._actions(from_version=cv + 1):
-            if "add" in a:
-                live[a["add"]["path"]] = a["add"]
-            elif "remove" in a:
-                live.pop(a["remove"]["path"], None)
-        if not live:
-            s = self.schema()
-            if s is None:
-                raise ValueError("empty table with no metaData action")
-            return spark.createDataFrame([], s)
-        return self._read_adds(spark, live)
+        folding the whole JSON log: the snapshot is the checkpoint's
+        state plus ONLY the commits after it (pre-checkpoint JSON files
+        are never even opened — the bounded replay every long-lived
+        Delta table depends on). Verified equal to the full JSON fold
+        by scan_delta_log_checkpoint's independent oracle."""
+        return self.read(spark)
 
 
 class DeltaLogTable(_CheckpointMixin):
@@ -1791,23 +1751,24 @@ class DeltaLogTable(_CheckpointMixin):
         self.log_dir = os.path.join(path, _LOG_DIR)
         self._store = log_store if log_store is not None else LogStore()
         os.makedirs(self.log_dir, exist_ok=True)
-        # instance-local txn high-water cache (fast replay pre-check;
-        # the authoritative fold happens under the commit lock)
-        self._txn_hw: dict[str, int] | None = None
+        # the latest snapshot this handle folded (see _snapshot)
+        self._snap: _Snapshot | None = None
 
     # --- log plumbing ----------------------------------------------------
 
-    def _compacted_files(self) -> list[tuple[int, int, str]]:
+    def _compacted_files(
+        self, names: list[str] | None = None
+    ) -> list[tuple[int, int, str]]:
         """(x, y, path) for every `<x>.<y>.compacted.json` minor log
         compaction file (the spec's newer log-compaction mechanism
         below checkpoints: one file carrying the RECONCILED actions of
         versions x..y, which a reader may substitute for opening each
-        of them)."""
-        import re as _re
-
+        of them). ``names`` is a listing already taken."""
+        if names is None:
+            names = self._store.list(self.log_dir)
         out = []
-        for f in self._store.list(self.log_dir):
-            m = _re.match(r"^(\d{20})\.(\d{20})\.compacted\.json$", f)
+        for f in names:
+            m = _COMPACTED_RE.match(f)
             if m:
                 out.append(
                     (int(m.group(1)), int(m.group(2)),
@@ -1815,31 +1776,30 @@ class DeltaLogTable(_CheckpointMixin):
                 )
         return sorted(out)
 
-    def _version_files(self) -> list[tuple[int, str]]:
+    def _version_files(
+        self, names: list[str] | None = None
+    ) -> list[tuple[int, str]]:
+        if names is None:
+            names = self._store.list(self.log_dir)
         out = []
-        for f in self._store.list(self.log_dir):
-            if f.endswith(".json") and len(f) == 25:
+        for f in names:
+            if _is_commit_file(f):
                 out.append((int(f[:20]), os.path.join(self.log_dir, f)))
         return sorted(out)
 
     def latest_version(self) -> int:
-        vf = self._version_files()
-        best = vf[-1][0] if vf else -1
-        for _x, y, _p in self._compacted_files():
-            best = max(best, y)  # originals may be cleaned up post-compaction
-        # log cleanup may delete EVERY json at/below the checkpoint:
-        # the checkpoint version must still anchor the sequence, or the
-        # next commit would re-use a version number
-        cv = self.last_checkpoint()
-        if cv is not None:
-            best = max(best, cv)
-        return best
+        """The snapshot's version: the newest listed commit or compacted
+        segment end, anchored on the checkpoint when log cleanup
+        deleted every JSON at or below it (the next commit must never
+        re-use a version number)."""
+        return self._snapshot().version
 
     def _actions(
         self,
         as_of_version: int | None = None,
         from_version: int = 0,
         exact: bool = False,
+        names: list[str] | None = None,
     ):
         """Yield (version, action_dict) in commit order. The log is the
         table: every read below is a fold over this stream. Files below
@@ -1864,10 +1824,12 @@ class DeltaLogTable(_CheckpointMixin):
         coarse. A missing version in a non-exact fold also raises
         unless a segment covers it (a snapshot silently missing
         commits would let DML preconditions validate against a
-        truncated table)."""
-        vf = dict(self._version_files())
+        truncated table). ``names`` is a listing already taken."""
+        if names is None:
+            names = self._store.list(self.log_dir)
+        vf = dict(self._version_files(names))
         comp: dict[int, list[tuple[int, str]]] = {}
-        for x, y, p in self._compacted_files():
+        for x, y, p in self._compacted_files(names):
             comp.setdefault(x, []).append((y, p))
         hi_candidates = [max(vf)] if vf else []
         hi_candidates += [y for ys in comp.values() for y, _ in ys]
@@ -1927,13 +1889,12 @@ class DeltaLogTable(_CheckpointMixin):
         the lock, so two racing first appends can never both ledger a
         table identity. Returns the committed version."""
         # single write funnel: every commit path gates on the table's
-        # protocol (outside the lock — the fold is checkpoint-bounded)
+        # protocol (outside the lock — a fast fail)
         self._check_write_protocol()
         with self._commit_lock():
-            # re-validate UNDER the lock: the watermark memo makes this
-            # O(commits since the pre-lock check) — usually zero files —
-            # and it closes the race where a concurrent writer ledgers
-            # an unknown writerFeature between the gate and the lock
+            # re-validate UNDER the lock against a fresh listing: it
+            # closes the race where a concurrent writer ledgers an
+            # unknown writerFeature between the gate and the lock
             self._check_write_protocol()
             if precondition is not None and not precondition():
                 return None
@@ -1950,9 +1911,9 @@ class DeltaLogTable(_CheckpointMixin):
                 for a in actions
             )
             prev = self._last_commit_info() or {}
-            # O(1) enablement check: disablement is unsupported, so a
-            # table is ICT iff its LAST commitInfo is stamped (one file
-            # read — never a full-log fold inside the commit lock).
+            # enablement check: disablement is unsupported, so a table
+            # is ICT iff its LAST commitInfo is stamped (the snapshot
+            # keeps it — never a full-log fold inside the commit lock).
             # After an (external) log cleanup that left NO commitInfo
             # at all, fall back to the metaData config — ICT must
             # never silently stop being stamped (cleanup_log itself
@@ -1995,26 +1956,6 @@ class DeltaLogTable(_CheckpointMixin):
                         "store's listing lagged the true tip); re-plan "
                         "against the current log and retry"
                     ) from None
-            for a in actions:  # keep the txn fast-path cache warm
-                if "txn" in a and self._txn_hw is not None:
-                    t = a["txn"]
-                    self._txn_hw[t["appId"]] = max(
-                        self._txn_hw.get(t["appId"], -1), t["version"]
-                    )
-            # advance the protocol watermark over our OWN protocol-free
-            # commit so the next gate stays O(1) instead of re-scanning
-            # the file we just wrote
-            if (
-                getattr(self, "_proto_seen_v", None) == v - 1
-                and not any("protocol" in a for a in actions)
-            ):
-                self._proto_seen_v = v
-            # promote the row-id high-water mark only AFTER the write
-            # succeeded — a failed O_EXCL must not poison the cache
-            pend = getattr(self, "_row_hwm_pending", None)
-            if pend is not None and pend[0] == v:
-                self._row_hwm_seen, self._row_hwm_cache = v, pend[1]
-                self._row_hwm_pending = None
             self._write_version_crc(v)
             self._maybe_uniform(v)
             return v
@@ -2053,19 +1994,22 @@ class DeltaLogTable(_CheckpointMixin):
         delta-spark's VersionChecksum): tableSizeBytes / numFiles /
         numMetadata / numProtocol of the post-commit state, derived
         from the same checkpoint-anchored fold every reader uses.
-        Readers re-derive the numbers and RAISE on mismatch
-        (snapshot_adds) — the cheap tripwire that catches fold
+        Folds re-derive the numbers and RAISE on mismatch (_fold) —
+        the cheap tripwire that catches fold
         divergence (a buggy writer, a truncated log) at the very next
         read instead of as silent wrong data downstream. Still under
-        the commit lock, so the fold is exactly this commit's state."""
-        adds = self.snapshot_adds(v)
+        the commit lock: the snapshot advances by this one commit (a
+        foreign commit landed above it folds ``v`` on its own)."""
+        snap = self._snapshot()
+        if snap.version != v:
+            snap = self._fold(v)
         info = {
             "tableSizeBytes": sum(
-                int(a.get("size") or 0) for a in adds.values()
+                int(a.get("size") or 0) for a in snap.adds.values()
             ),
-            "numFiles": len(adds),
-            "numMetadata": 1 if self._metadata_dict() is not None else 0,
-            "numProtocol": 1 if self._protocol_dict() is not None else 0,
+            "numFiles": len(snap.adds),
+            "numMetadata": 1 if snap.metadata is not None else 0,
+            "numProtocol": 1 if snap.protocol is not None else 0,
         }
         p = os.path.join(self.log_dir, f"{v:020d}.crc")
         self._store.put_atomic(p, json.dumps(info, sort_keys=True))
@@ -2099,38 +2043,138 @@ class DeltaLogTable(_CheckpointMixin):
 
     # --- snapshot state ---------------------------------------------------
 
+    def _fold(
+        self,
+        as_of_version: int | None = None,
+        names: list[str] | None = None,
+        base: _Snapshot | None = None,
+    ) -> _Snapshot:
+        """The snapshot at ``as_of_version`` (None: the newest listed
+        version) in ONE pass: the last CHECKPOINT's state whenever it
+        covers the requested window, plus the JSON tail after it —
+        bounded replay, and the fold that survives pre-checkpoint JSON
+        cleanup. Time travel BELOW the checkpoint folds the original
+        JSON from version 0, raising loudly if cleanup already removed
+        the needed commits (never a silent partial snapshot — DML
+        preconditions validate against this fold). ``base`` folds only
+        the commits listed above an earlier snapshot on top of it.
+        ``names`` is a listing already taken. The folded version is
+        checked against its `.crc` sidecar when one exists."""
+        if names is None:
+            names = self._store.list(self.log_dir)
+        cv = None
+        if base is not None:
+            proto, meta, info = base.protocol, base.metadata, base.commit_info
+            txns, doms = dict(base.txns), dict(base.domains)
+            adds, removes = dict(base.adds), dict(base.removes)
+            start = base.version + 1
+        else:
+            proto = meta = info = None
+            txns, doms, adds, removes = {}, {}, {}, {}
+            start = 0
+            cv = self.last_checkpoint()
+            if cv is not None and (
+                as_of_version is None or as_of_version >= cv
+            ):
+                st = self._checkpoint_state(cv)
+                proto, meta, txns = st["proto"], st["meta"], st["txns"]
+                doms, adds, removes = st["doms"], st["adds"], st["removes"]
+                start = cv + 1
+        version = start - 1
+        for v, a in self._actions(
+            as_of_version, from_version=start, names=names
+        ):
+            if v != version:
+                version, info = v, None
+            if "add" in a:
+                adds[a["add"]["path"]] = a["add"]
+            elif "remove" in a:
+                adds.pop(a["remove"]["path"], None)
+                removes[a["remove"]["path"]] = a["remove"]
+            elif "metaData" in a:
+                meta = a["metaData"]
+            elif "protocol" in a:
+                proto = a["protocol"]
+            elif "txn" in a:
+                t = a["txn"]
+                txns[t["appId"]] = max(txns.get(t["appId"], -1), t["version"])
+            elif "domainMetadata" in a:
+                doms[a["domainMetadata"]["domain"]] = a["domainMetadata"]
+            elif "commitInfo" in a:
+                info = a["commitInfo"]
+        if cv is not None and version == cv:
+            # no tail after the checkpoint: its own commit file (log
+            # cleanup always retains the newest covered one) carries
+            # the last commitInfo — the ICT high-water mark
+            p = dict(self._version_files(names)).get(cv)
+            for line in (self._store.read(p) if p else "").splitlines():
+                if '"commitInfo"' in line:
+                    info = json.loads(line).get("commitInfo", info)
+        if version >= 0:
+            self._validate_version_crc(version, adds)
+        return _Snapshot(
+            version=version,
+            key=self._listing_key(names),
+            protocol=proto,
+            metadata=meta,
+            txns=txns,
+            domains=doms,
+            adds=adds,
+            removes=removes,
+            commit_info=info,
+        )
+
+    def _listing_key(self, names: list[str]) -> frozenset:
+        """(name, size, mtime) of every state file in a listing — the
+        snapshot cache key. Size and mtime make a commit rewritten in
+        place (a foreign or tampered log) a change like any other;
+        a commit the coordinator has not backfilled has neither."""
+        key = set()
+        for f in names:
+            if _is_state_file(f):
+                try:
+                    st = os.stat(os.path.join(self.log_dir, f))
+                    key.add((f, st.st_size, st.st_mtime_ns))
+                except OSError:
+                    key.add((f, None, None))
+        return frozenset(key)
+
+    def _snapshot(self) -> _Snapshot:
+        """The latest snapshot, from ONE listing of `_delta_log`. The
+        cached one is reused while the listing shows the same commits,
+        compacted segments and checkpoints; when the only change is
+        new commits above it (this handle's own or a foreign one),
+        just those are folded on top; any other change (a deleted or
+        rewritten commit, a new checkpoint, a compacted segment)
+        refolds from the checkpoint — so a commit deleted mid-log
+        fails the same handle's next read loudly. Replacing it is one
+        attribute assignment: handles shared across threads need no
+        lock."""
+        names = self._store.list(self.log_dir)
+        key = self._listing_key(names)
+        snap = self._snap
+        if snap is not None and snap.key == key:
+            return snap
+        base = None
+        if snap is not None and snap.key <= key and all(
+            _is_commit_file(f) and int(f[:20]) > snap.version
+            for f, _size, _mtime in key - snap.key
+        ):
+            base = snap
+        snap = self._fold(names=names, base=base)
+        self._snap = snap
+        return snap
+
     def snapshot_adds(self, as_of_version: int | None = None) -> dict[str, dict]:
         """path -> add action for every live file at a version (adds
         minus removes, in first-add order) — the canonical Delta
-        snapshot fold, one implementation shared by every reader.
-
-        Starts from the last CHECKPOINT whenever one covers the
-        requested window (state at cv + only the JSON tail after it —
-        bounded replay, and the fold that survives pre-checkpoint JSON
-        cleanup). Time travel BELOW the checkpoint folds the original
-        JSON from version 0, raising loudly if cleanup already removed
-        the needed commits (never a silent partial snapshot — DML
-        preconditions validate against this fold)."""
+        snapshot fold (see _fold), one implementation shared by every
+        reader. The latest version reads the cached snapshot; time
+        travel folds uncached."""
         self._check_read_protocol()
-        live: dict[str, dict] = {}
-        start = 0
-        cv = self.last_checkpoint()
-        if cv is not None and (as_of_version is None or as_of_version >= cv):
-            live = self._checkpoint_adds(cv)
-            start = cv + 1
-        last = start - 1
-        for v, a in self._actions(as_of_version, from_version=start):
-            if "add" in a:
-                live[a["add"]["path"]] = a["add"]
-            elif "remove" in a:
-                live.pop(a["remove"]["path"], None)
-            last = max(last, v)
-        # checksum tripwire: when the folded version has a .crc
-        # sidecar, the fold must agree with it (O(1) json read)
-        v_eff = as_of_version if as_of_version is not None else last
-        if v_eff >= 0:
-            self._validate_version_crc(v_eff, live)
-        return live
+        if as_of_version is not None:
+            return self._fold(as_of_version).adds
+        return dict(self._snapshot().adds)
 
     def snapshot_files(self, as_of_version: int | None = None) -> list[str]:
         return list(self.snapshot_adds(as_of_version))
@@ -2176,97 +2220,28 @@ class DeltaLogTable(_CheckpointMixin):
 
         return check
 
-    def txn_versions(self, refresh: bool = False) -> dict[str, int]:
+    def txn_versions(self) -> dict[str, int]:
         """appId -> highest committed txn version (the exactly-once
-        high-water mark). The fold starts from the last CHECKPOINT's
-        txn rows and opens only the JSON tail after it (O(recent
-        commits), not O(all commits) — the checkpoint exists exactly to
-        bound this). Cached per instance for the replay fast path;
-        ``refresh=True`` (used under the commit lock) re-folds."""
-        if self._txn_hw is not None and not refresh:
-            return dict(self._txn_hw)
-        hw: dict[str, int] = {}
-        start = 0
-        cv = self.last_checkpoint()
-        if cv is not None:
-            import pyarrow.parquet as pq
-
-            for cp in self._checkpoint_paths(cv):
-                for rec in (
-                    pq.read_table(cp, columns=["txn"]).column("txn").to_pylist()
-                ):
-                    if rec is not None:
-                        hw[rec["appId"]] = max(
-                            hw.get(rec["appId"], -1), rec["version"]
-                        )
-            start = cv + 1
-        for _, a in self._actions(from_version=start):
-            if "txn" in a:
-                t = a["txn"]
-                hw[t["appId"]] = max(hw.get(t["appId"], -1), t["version"])
-        self._txn_hw = dict(hw)
-        return hw
+        high-water mark), from the snapshot: the last checkpoint's txn
+        rows plus the JSON tail after it. Every call re-lists the log,
+        so a commit by another handle shows up at once."""
+        return dict(self._snapshot().txns)
 
     def _metadata_dict(self) -> dict | None:
         """Latest metaData action — the checkpoint's metaData row as
         the base whenever a checkpoint exists (the spec allows deleting
         pre-checkpoint JSON once a checkpoint covers it; table identity
         must survive that), overridden by any later metaData in the
-        JSON tail after it."""
-        m = None
-        start = 0
-        cv = self.last_checkpoint()
-        if cv is not None:
-            import pyarrow.parquet as pq
-
-            for cp in self._checkpoint_paths(cv):
-                for rec in (
-                    pq.read_table(cp, columns=["metaData"])
-                    .column("metaData")
-                    .to_pylist()
-                ):
-                    if rec is not None:
-                        rec = dict(rec)
-                        rec["configuration"] = dict(rec.get("configuration") or [])
-                        if rec.get("format") is not None:
-                            rec["format"] = {
-                                "provider": rec["format"].get("provider"),
-                                "options": dict(rec["format"].get("options") or []),
-                            }
-                        else:
-                            rec.pop("format", None)
-                        m = rec
-            start = cv + 1
-        for _, a in self._actions(from_version=start):
-            if "metaData" in a:
-                m = a["metaData"]
-        return m
+        JSON tail after it. A deep copy: callers may mutate it."""
+        return copy.deepcopy(self._snapshot().metadata)
 
     def _protocol_dict(self) -> dict | None:
         """Latest protocol action — the checkpoint row as the base
         (surviving pre-checkpoint log cleanup; otherwise every DV
         delete on a cleaned-up table would re-ledger a redundant
         protocol upgrade), overridden by later protocol actions in the
-        JSON tail."""
-        p = None
-        start = 0
-        cv = self.last_checkpoint()
-        if cv is not None:
-            import pyarrow.parquet as pq
-
-            for cp in self._checkpoint_paths(cv):
-                for rec in (
-                    pq.read_table(cp, columns=["protocol"])
-                    .column("protocol")
-                    .to_pylist()
-                ):
-                    if rec is not None:
-                        p = {k: v for k, v in rec.items() if v is not None}
-            start = cv + 1
-        for _, a in self._actions(from_version=start):
-            if "protocol" in a:
-                p = a["protocol"]
-        return p
+        JSON tail. A deep copy: callers may mutate it."""
+        return copy.deepcopy(self._snapshot().protocol)
 
     def schema(self) -> StructType | None:
         m = self._metadata_dict()
@@ -3005,7 +2980,6 @@ class DeltaLogTable(_CheckpointMixin):
                     )
                 }
             )
-            self._write_proto_ok = False
         now = _now_ms()
         actions += [
             {"metaData": meta},
@@ -3197,20 +3171,7 @@ class DeltaLogTable(_CheckpointMixin):
         )
 
     def _last_commit_info(self) -> dict | None:
-        vf = self._version_files()
-        best_v, best_path = (vf[-1] if vf else (-1, None))
-        for _x, y, p in self._compacted_files():
-            if y > best_v:
-                best_v, best_path = y, p
-        if best_path is None:
-            return None
-        last = None
-        for line in self._store.read(best_path).splitlines():
-            if line.strip():
-                a = json.loads(line)
-                if "commitInfo" in a:
-                    last = a["commitInfo"]
-        return last
+        return copy.deepcopy(self._snapshot().commit_info)
 
     # --- identity columns ------------------------------------------------------
 
@@ -3684,7 +3645,6 @@ class DeltaLogTable(_CheckpointMixin):
                     )
                 }
             )
-            self._write_proto_ok = False
         actions += [
             {
                 "domainMetadata": {
@@ -3722,27 +3682,7 @@ class DeltaLogTable(_CheckpointMixin):
         checkpoints to retain live domains, so the fold survives log
         cleanup)."""
         self._check_read_protocol()  # a read surface like any other
-        doms: dict[str, dict] = {}
-        start = 0
-        cv = self.last_checkpoint()
-        if cv is not None:
-            import pyarrow.parquet as pq
-
-            for cp in self._checkpoint_paths(cv):
-                f = pq.ParquetFile(cp)
-                if "domainMetadata" not in f.schema_arrow.names:
-                    continue
-                for rec in (
-                    pq.read_table(cp, columns=["domainMetadata"])
-                    .column("domainMetadata")
-                    .to_pylist()
-                ):
-                    if rec is not None:
-                        doms[rec["domain"]] = dict(rec)
-            start = cv + 1
-        for _, a in self._actions(from_version=start):
-            if "domainMetadata" in a:
-                doms[a["domainMetadata"]["domain"]] = a["domainMetadata"]
+        doms = self._snapshot().domains
         return {
             d: json.loads(r.get("configuration") or "{}")
             for d, r in doms.items()
@@ -3814,7 +3754,6 @@ class DeltaLogTable(_CheckpointMixin):
                 }
             }
         )
-        self._write_proto_ok = False
         adds_ok = self._adds_unchanged(snap)
 
         def _pre() -> bool:
@@ -3847,12 +3786,8 @@ class DeltaLogTable(_CheckpointMixin):
             cfg["delta.rowTracking.materializedRowCommitVersionColumnName"],
         )
 
-    def _row_id_hwm(self, at_latest: int) -> int:
-        """The current rowIdHighWaterMark (-1 before any allocation),
-        watermark-cached per handle: our own commits keep the cache
-        warm; a foreign commit in between forces one domain fold."""
-        if getattr(self, "_row_hwm_seen", None) == at_latest:
-            return self._row_hwm_cache
+    def _row_id_hwm(self) -> int:
+        """The current rowIdHighWaterMark (-1 before any allocation)."""
         cfg = self.domain_metadata().get(self._ROW_TRACKING_DOMAIN) or {}
         return int(cfg.get("rowIdHighWaterMark", -1))
 
@@ -3886,7 +3821,7 @@ class DeltaLogTable(_CheckpointMixin):
         after this ran), the caller's actions stay unstamped, so the
         retry re-enters this funnel and mints ids off the RACER's
         advanced high-water mark instead of replaying stale ones."""
-        proto = getattr(self, "_proto_cache", None) or {}
+        proto = self._snapshot().protocol or {}
         tracked = "rowTracking" in (proto.get("writerFeatures") or ())
         if not tracked:
             tracked = any(
@@ -3903,7 +3838,7 @@ class DeltaLogTable(_CheckpointMixin):
         ]
         if not pending:
             return actions
-        cur = self._row_id_hwm(v - 1)
+        cur = self._row_id_hwm()
         stamped: dict[int, dict] = {}
         for ad in pending:
             new = dict(ad)
@@ -3932,7 +3867,6 @@ class DeltaLogTable(_CheckpointMixin):
                 }
             }
         )
-        self._row_hwm_pending = (v, cur)
         return actions
 
     # --- liquid clustering state (the `clustering` writer feature) --------
@@ -3973,7 +3907,6 @@ class DeltaLogTable(_CheckpointMixin):
                     )
                 }
             )
-            self._write_proto_ok = False
         actions += [
             {
                 "domainMetadata": {
@@ -4275,7 +4208,6 @@ class DeltaLogTable(_CheckpointMixin):
             # feature in the enabling commit — a legacy writer that
             # doesn't keep the Iceberg metadata in sync (or respect
             # the compat invariants) must be gated out
-            self._write_proto_ok = False
             actions.insert(
                 0,
                 {
@@ -4592,8 +4524,6 @@ class DeltaLogTable(_CheckpointMixin):
             raise MetadataChangedError(
                 "concurrent commit while dropping the feature; retry"
             )
-        self._read_proto_ok = False
-        self._write_proto_ok = False
         self.checkpoint()  # the post-drop anchor foreign readers fold from
         return v
 
@@ -4646,13 +4576,10 @@ class DeltaLogTable(_CheckpointMixin):
         what it supports, or — at version 3 — whose readerFeatures
         contain anything it does not implement). Enforced on every
         read surface; unknown WRITER features do not block reads
-        (delta-spark's behavior). Memoized per instance after the
-        first pass (the snapshot-fold hot path calls this on every
-        fold; a protocol only ever ratchets up, and real clients also
-        gate once per table handle)."""
-        if getattr(self, "_read_proto_ok", False):
-            return
-        p = self._protocol_dict()
+        (delta-spark's behavior). A plain check of the snapshot's
+        protocol: the snapshot re-lists the log on every call, so a
+        protocol a racer ledgered is seen at the next gate."""
+        p = self._snapshot().protocol
         if p is None:
             return
         mrv = p.get("minReaderVersion", 1)
@@ -4669,22 +4596,6 @@ class DeltaLogTable(_CheckpointMixin):
                     f"{sorted(unknown)} (supported: "
                     f"{sorted(_SUPPORTED_READER_FEATURES)})"
                 )
-        self._read_proto_ok = True
-
-    def _tail_has_protocol(self, lo: int, hi: int) -> bool | None:
-        """True iff any retained commit in [lo, hi] carries a protocol
-        action; None when part of the range is no longer retained (the
-        caller must fall back to a full re-validation rather than
-        assume the missing commits were protocol-free)."""
-        vf = dict(self._version_files())
-        for v in range(lo, hi + 1):
-            p = vf.get(v)
-            if p is None:
-                return None
-            for line in self._store.read(p).splitlines():
-                if '"protocol"' in line and "protocol" in json.loads(line):
-                    return True
-        return False
 
     def _check_write_protocol(self) -> None:
         """Writer-side protocol gate: refuse to COMMIT to a table whose
@@ -4693,11 +4604,8 @@ class DeltaLogTable(_CheckpointMixin):
         whatever invariant that feature maintains. Runs in the single
         commit funnel (_commit) BOTH outside the lock (fast fail) and
         again under it (a racer's protocol upgrade between gate and
-        lock must not be written around). The memo is a VERSION
-        WATERMARK, not a per-handle boolean: a long-lived handle
-        re-scans only the commits that appeared since its last check
-        (O(new tail), usually zero files) and re-gates in full the
-        moment one of them ledgers a protocol action.
+        lock must not be written around). Like the read gate, a plain
+        check of the current snapshot's protocol and configuration.
 
         COORDINATED-COMMITS ownership gate (the catalogManaged rule):
         a table whose configuration names a commit coordinator is
@@ -4708,39 +4616,19 @@ class DeltaLogTable(_CheckpointMixin):
         here; reads stay open (a filesystem reader legitimately sees
         the backfilled prefix)."""
         self._check_read_protocol()
-        latest = self.latest_version()
-        # ownership memo keyed on the log tip: the property only moves
-        # via a metaData commit, so an unchanged tip cannot change the
-        # answer — the hot path stays free of metadata folds
-        if getattr(self, "_coord_seen_v", None) != latest:
-            cfg = (self._metadata_dict() or {}).get("configuration") or {}
-            self._coord_name = cfg.get(
-                "delta.coordinatedCommits.commitCoordinator-preview"
-            ) or cfg.get("delta.coordinatedCommits.commitCoordinator")
-            self._coord_seen_v = latest
-        if self._coord_name and not isinstance(
-            self._store, CoordinatedLogStore
-        ):
+        snap = self._snapshot()
+        cfg = (snap.metadata or {}).get("configuration") or {}
+        coord = cfg.get(
+            "delta.coordinatedCommits.commitCoordinator-preview"
+        ) or cfg.get("delta.coordinatedCommits.commitCoordinator")
+        if coord and not isinstance(self._store, CoordinatedLogStore):
             raise ValueError(
                 f"table is owned by commit coordinator "
-                f"{self._coord_name!r}; a filesystem writer must not "
+                f"{coord!r}; a filesystem writer must not "
                 "commit directly — open it with a CoordinatedLogStore "
                 "(reads of the backfilled prefix remain allowed)"
             )
-        if getattr(self, "_write_proto_ok", False):
-            seen = getattr(self, "_proto_seen_v", -1)
-            if latest <= seen:
-                return
-            fresh = self._tail_has_protocol(seen + 1, latest)
-            if fresh is False:
-                self._proto_seen_v = latest
-                return
-            # a newer protocol action (or a cleaned gap hiding one):
-            # drop both memos and re-gate against the current fold
-            self._write_proto_ok = False
-            self._read_proto_ok = False
-            self._check_read_protocol()
-        p = self._protocol_dict()
+        p = snap.protocol
         if p is None:
             return
         mwv = p.get("minWriterVersion", 1)
@@ -4757,9 +4645,6 @@ class DeltaLogTable(_CheckpointMixin):
                     f"{sorted(unknown)} (supported: "
                     f"{sorted(_SUPPORTED_WRITER_FEATURES)})"
                 )
-        self._write_proto_ok = True
-        self._proto_seen_v = latest
-        self._proto_cache = p  # validated protocol (row-tracking gate reads it)
 
     def _forbid_append_only(self, verb: str) -> None:
         """`delta.appendOnly=true` (the appendOnly writer feature):
@@ -4950,7 +4835,7 @@ class DeltaLogTable(_CheckpointMixin):
                 df, identity
             )
         if app_id is not None and txn_version is not None:
-            # fast-path replay check off the instance cache; the
+            # early replay check (nothing staged yet); the
             # authoritative re-check runs under the commit lock below
             if txn_version <= self.txn_versions().get(app_id, -1):
                 return None
@@ -5042,7 +4927,6 @@ class DeltaLogTable(_CheckpointMixin):
                             )
                         }
                     )
-                    self._write_proto_ok = False
         df = self._apply_generated(df)
         df = self._apply_defaults(df)
         id_meta = None
@@ -5135,7 +5019,7 @@ class DeltaLogTable(_CheckpointMixin):
             # staged uuid files unreferenced — invisible garbage.
             checks.append(
                 lambda: txn_version
-                > self.txn_versions(refresh=True).get(app_id, -1)
+                > self.txn_versions().get(app_id, -1)
             )
         if evolved_meta is not None:
             # the widened metaData was derived from evolve_base: a
@@ -6319,7 +6203,6 @@ class DeltaLogTable(_CheckpointMixin):
                         )
                     }
                 )
-                self._write_proto_ok = False
         self._enforce_constraints(src)
         if src.groupBy(key).count().filter(F.col("count") > 1).limit(1).count():
             raise ValueError(
@@ -7175,7 +7058,6 @@ class DeltaLogTable(_CheckpointMixin):
             reader_features=("vacuumProtocolCheck",),
             writer_features=("vacuumProtocolCheck",),
         )
-        self._write_proto_ok = False
         v = self._commit(
             [
                 {"protocol": new_proto},
@@ -7230,7 +7112,6 @@ class DeltaLogTable(_CheckpointMixin):
         cfg = dict(meta.get("configuration") or {})
         cfg["delta.requireCheckpointProtectionBeforeVersion"] = str(n)
         meta["configuration"] = cfg
-        self._write_proto_ok = False
         v = self._commit(
             [
                 {"protocol": new_proto},
@@ -7359,7 +7240,7 @@ class DeltaLogTable(_CheckpointMixin):
         def _unloaded() -> bool:
             # a concurrent COPY INTO may have ledgered some of these
             # files while we staged — loading them again would double
-            led = self.txn_versions(refresh=True)
+            led = self.txn_versions()
             return all(led.get(_key(f), -1) < 0 for f in new)
 
         v = self._commit(
@@ -7960,7 +7841,9 @@ class DeltaLogTable(_CheckpointMixin):
         from deltasink_spark import roaring as _roaring
 
         cutoff = _now_ms() - retention_ms
-        adds = self.snapshot_adds()
+        self._check_read_protocol()
+        snap = self._snapshot()
+        adds = snap.adds
         # the live/removed set difference runs over RESOLVED filesystem
         # paths, never raw action strings: a foreign log can reference
         # one physical file under several encodings (absolute file://
@@ -7968,20 +7851,13 @@ class DeltaLogTable(_CheckpointMixin):
         # difference would let a stale encoding of a LIVE file through
         # to os.remove — permanent data loss
         live = {os.path.realpath(self._abs_of_add_path(p)) for p in adds}
-        # tombstones: the last checkpoint's retained remove actions +
-        # the JSON tail after it — the fold that both survives
-        # pre-checkpoint log cleanup and stays O(checkpoint + tail);
-        # tombstones that aged out of the checkpoint are beyond
-        # retention (real Delta's documented vacuum horizon)
-        start = 0
-        cv = self.last_checkpoint()
-        removed_actions: dict[str, dict] = {}
-        if cv is not None:
-            removed_actions = dict(self._checkpoint_removes(cv))
-            start = cv + 1
-        for _, a in self._actions(from_version=start):
-            if "remove" in a:
-                removed_actions[a["remove"]["path"]] = a["remove"]
+        # tombstones: the snapshot's latest remove per path — the last
+        # checkpoint's retained removes + the JSON tail after it, which
+        # both survives pre-checkpoint log cleanup and stays
+        # O(checkpoint + tail); tombstones that aged out of the
+        # checkpoint are beyond retention (real Delta's documented
+        # vacuum horizon)
+        removed_actions = snap.removes
         # retention: a file is reclaimable only when its YOUNGEST
         # tombstone has aged past the window (a re-removed file's age
         # restarts — a reader of the newer version may still hold it)

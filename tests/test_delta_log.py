@@ -301,7 +301,7 @@ def test_checkpoint_integrity_across_dedup_drains(spark, tmp_path):
     assert first and second and second[0] == first[-1] + 1
     ids = [r["event_id"] for r in sink.table.read(spark).select("event_id").collect()]
     assert sorted(ids) == list(range(30))
-    assert sink.table.txn_versions(refresh=True)["t_ckpt"] == second[-1]
+    assert sink.table.txn_versions()["t_ckpt"] == second[-1]
 
     def logged(sub):
         return max(int(f) for f in os.listdir(os.path.join(ckpt, sub)) if f.isdigit())
@@ -5433,7 +5433,7 @@ def test_empty_append_commits_no_data_file(spark, tmp_path):
     assert got.columns == ["event_id", "user_id", "value"] and got.count() == 0
     assert t.append(_ev(spark), "app", 1) == 1
     assert t.append(empty, "app", 2) == 2
-    assert t.txn_versions(refresh=True)["app"] == 2
+    assert t.txn_versions()["app"] == 2
     actions = [
         next(iter(json.loads(line)))
         for line in open(os.path.join(t.log_dir, f"{2:020d}.json"))
