@@ -1585,15 +1585,19 @@ class _CheckpointMixin:
         info = self._last_checkpoint_info()
         return None if info is None else int(info["version"])
 
-    def _checkpoint_paths(self, cv: int) -> list[str]:
+    def _checkpoint_paths(
+        self, cv: int, info: dict | None = None
+    ) -> list[str]:
         """The TOP-LEVEL checkpoint file(s) at ``cv`` — the classic
         single file, the `parts` multi-part set `_last_checkpoint`
         declares (a reader must open ALL parts; rows may land in any
         of them), or a V2 UUID-named file
         (`<v>.checkpoint.<uuid>.parquet` — discovered by listing, the
         spec's rule; racing writers can leave several, each complete,
-        so any one serves — the lexicographically last is taken)."""
-        info = self._last_checkpoint_info() or {}
+        so any one serves — the lexicographically last is taken).
+        ``info`` is the `_last_checkpoint` content already read."""
+        if info is None:
+            info = self._last_checkpoint_info() or {}
         parts = int(info.get("parts", 0)) if int(info.get("version", -1)) == cv else 0
         if parts > 1:
             return [
@@ -1620,13 +1624,12 @@ class _CheckpointMixin:
             return [os.path.join(self.log_dir, v2[-1])]
         return [classic]  # let the caller's open raise the clear ENOENT
 
-    def _checkpoint_file_action_paths(self, cv: int) -> list[str]:
+    def _checkpoint_file_action_paths(self, tops: list[str]) -> list[str]:
         """Every parquet file carrying the checkpoint's FILE actions
-        (add/remove): the top-level file(s) themselves plus any v2
-        SIDECAR files their `sidecar` rows reference (resolved against
-        `_delta_log/_sidecars/` for relative names, or as absolute
-        URIs — both forms the spec allows)."""
-        tops = self._checkpoint_paths(cv)
+        (add/remove): the top-level file(s) ``tops`` themselves plus
+        any v2 SIDECAR files their `sidecar` rows reference (resolved
+        against `_delta_log/_sidecars/` for relative names, or as
+        absolute URIs — both forms the spec allows)."""
         out = list(tops)
         for cp in tops:
             out.extend(self._sidecars_of_top(cp))
@@ -1657,10 +1660,11 @@ class _CheckpointMixin:
                     out.append(os.path.join(self.log_dir, "_sidecars", p))
         return out
 
-    def _checkpoint_state(self, cv: int) -> dict:
+    def _checkpoint_state(self, cv: int, info: dict) -> dict:
         """The FULL reconstructed state of the checkpoint at ``cv`` —
         meta, proto, txns, domains, adds, removes — from ONE parquet
-        read per part: the base every snapshot fold starts from."""
+        read per part: the base every snapshot fold starts from.
+        ``info`` is the `_last_checkpoint` content the fold read."""
         import pyarrow.parquet as pq
 
         meta = None
@@ -1669,7 +1673,7 @@ class _CheckpointMixin:
         adds: dict[str, dict] = {}
         removes: dict[str, dict] = {}
         doms: dict[str, dict] = {}
-        tops = self._checkpoint_paths(cv)
+        tops = self._checkpoint_paths(cv, info)
         # non-file actions live in the top-level file(s); file actions
         # in the top-level AND (v2) any sidecars — the file-action list
         # includes the tops, so each path reads its columns ONCE
@@ -1678,7 +1682,7 @@ class _CheckpointMixin:
             for cp in tops
         ] + [
             (cp, ("add", "remove"))
-            for cp in self._checkpoint_file_action_paths(cv)
+            for cp in self._checkpoint_file_action_paths(tops)
         ]
         for cp, want in plan:
             f = pq.ParquetFile(cp)
@@ -2072,11 +2076,14 @@ class DeltaLogTable(_CheckpointMixin):
             proto = meta = info = None
             txns, doms, adds, removes = {}, {}, {}, {}
             start = 0
-            cv = self.last_checkpoint()
+            # `_last_checkpoint` is read once per fold; the checkpoint
+            # state reuses it to find the top-level file(s)
+            info = self._last_checkpoint_info()
+            cv = None if info is None else int(info["version"])
             if cv is not None and (
                 as_of_version is None or as_of_version >= cv
             ):
-                st = self._checkpoint_state(cv)
+                st = self._checkpoint_state(cv, info)
                 proto, meta, txns = st["proto"], st["meta"], st["txns"]
                 doms, adds, removes = st["doms"], st["adds"], st["removes"]
                 start = cv + 1
@@ -3966,16 +3973,28 @@ class DeltaLogTable(_CheckpointMixin):
         return rows, complete
 
     @staticmethod
-    def _cdc_clause_counts(cdc_frame: DataFrame) -> dict[str, int]:
-        """Rows per _change_type over the change frame — ONE small
-        aggregation whose inputs every DML path has already pinned
-        (localCheckpoint), mirroring the per-clause SQL metrics
-        delta-spark instruments inside the rewrite job itself. Cost is
-        O(changed rows), never O(table)."""
-        return {
-            r[0]: int(r[1])
-            for r in cdc_frame.groupBy("_change_type").count().collect()
-        }
+    def _bytes_of(adds) -> int:
+        """Total logged ``size`` across add dicts."""
+        return sum(int(a.get("size") or 0) for a in adds)
+
+    def _cdc_counts(self, cdc_actions: list[dict]) -> dict[str, int]:
+        """Rows per _change_type in the staged cdc file(s): one column
+        read of what was written, never a re-run of the change plan (a
+        nondeterministic upstream must not desync the metrics from the
+        published CDF, and the plan may scan far more than it wrote)."""
+        import pyarrow.parquet as pq
+
+        counts: dict[str, int] = {}
+        for a in cdc_actions:
+            col = (
+                pq.ParquetFile(self._abs_of_add_path(a["cdc"]["path"]))
+                .read(columns=["_change_type"])
+                .column(0)
+            )
+            for vc in col.value_counts().to_pylist():
+                k = vc["values"]
+                counts[k] = counts.get(k, 0) + vc["counts"]
+        return counts
 
     @staticmethod
     def _op_metrics(
@@ -3997,13 +4016,15 @@ class DeltaLogTable(_CheckpointMixin):
         Copied + numTargetFilesAdded/Removed; OPTIMIZE numAddedFiles/
         numRemovedFiles/numAddedBytes/numRemovedBytes. Row numbers come
         from add-action stats (added AND removed sides) plus the
-        per-clause counts the DML path measured (``clause_counts``) or
-        the DV cardinality delta (``dv_rows``) — omitted rather than
-        guessed when any contributing add lacks stats."""
+        per-clause counts (``clause_counts``: rows per _change_type in
+        the cdc file(s) the verb staged, read back by _cdc_counts —
+        what was written, not a re-run of the change plan) or the DV
+        cardinality delta (``dv_rows``) — omitted rather than guessed
+        when any contributing add lacks stats."""
         rows, complete = DeltaLogTable._rows_of_adds(adds)
-        nbytes = sum(int(a.get("size") or 0) for a in adds)
+        nbytes = DeltaLogTable._bytes_of(adds)
         rrows, rcomplete = DeltaLogTable._rows_of_adds(removed_adds)
-        rbytes = sum(int(a.get("size") or 0) for a in removed_adds)
+        rbytes = DeltaLogTable._bytes_of(removed_adds)
         cc = clause_counts or {}
         m: dict[str, str] = {}
         if write:
@@ -5293,7 +5314,29 @@ class DeltaLogTable(_CheckpointMixin):
             )
         return v
 
-    def _optimize_write(self, df: DataFrame, pb: tuple[str, ...]) -> DataFrame:
+    @staticmethod
+    def _plan_bytes(df: DataFrame) -> int | None:
+        """Catalyst's size estimate of ``df``'s optimized plan, or None
+        when it has none (the Long.Max sentinel of RDD-backed frames)."""
+        try:
+            est = int(
+                str(
+                    df._jdf.queryExecution()
+                    .optimizedPlan()
+                    .stats()
+                    .sizeInBytes()
+                )
+            )
+        except Exception:
+            return None
+        return est if 0 < est < (1 << 50) else None
+
+    def _optimize_write(
+        self,
+        df: DataFrame,
+        pb: tuple[str, ...],
+        bound_bytes: int | None = None,
+    ) -> DataFrame:
         """delta.autoOptimize.optimizeWrite (delta-spark's optimized
         write): ONE pre-write shuffle that bin-packs the output so a
         micro-batch lands as few right-sized files instead of one tiny
@@ -5308,7 +5351,17 @@ class DeltaLogTable(_CheckpointMixin):
         shuffle. On a partitioned table the shuffle keys on the
         partition columns, so each Hive partition's rows collapse into
         the fewest tasks and ~binSize files, exactly the adaptive
-        shuffle delta-spark injects before the write."""
+        shuffle delta-spark injects before the write.
+
+        The row-level DML verbs (delete_where, update_where,
+        update_where_dv, merge, merge_when and merge_scd2) bin-pack
+        their staged rows through it (_stage_rewrite) whatever the
+        property says, so each adds ceil(bytes / binSize) files, or
+        one per touched partition, instead of one per upstream task.
+        They pass ``bound_bytes``: the logged size of the files they
+        rewrite, plus the source's estimate for a MERGE. It caps
+        Catalyst's estimate and stands in for an unknown one; an
+        append passes none."""
         cfg = (self._metadata_dict() or {}).get("configuration") or {}
         bin_size = int(
             cfg.get(
@@ -5317,18 +5370,15 @@ class DeltaLogTable(_CheckpointMixin):
             )
         )
         cap = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        try:
-            est = int(
-                str(
-                    df._jdf.queryExecution()
-                    .optimizedPlan()
-                    .stats()
-                    .sizeInBytes()
-                )
-            )
-        except Exception:
-            est = 0
-        if not (0 < est < (1 << 50)):
+        est = self._plan_bytes(df)
+        if bound_bytes is not None:
+            # Catalyst's size-only estimate of an inner or outer join
+            # is the PRODUCT of its sides: a MERGE's staged union reads
+            # gigabytes for a few hundred KB of rows. A rewrite can
+            # never stage more than it reads, so its bound caps the
+            # estimate and stands in for an unknown one
+            est = bound_bytes if est is None else min(est, bound_bytes)
+        if est is None:
             # Catalyst couldn't estimate (Long.Max sentinel on
             # RDD-backed frames): shuffling to the session default
             # would SPREAD a tiny batch into hundreds of one-row
@@ -5339,6 +5389,26 @@ class DeltaLogTable(_CheckpointMixin):
         n = max(1, min(-(-est // bin_size), cap))
         keys = [c for c in pb if c in df.columns]
         return df.repartition(n, *keys) if keys else df.repartition(n)
+
+    def _stage_rewrite(
+        self,
+        df: DataFrame,
+        rewritten: list[dict],
+        source: DataFrame | None = None,
+        mapping: dict[str, str] | None = None,
+    ) -> list[dict]:
+        """Stage a DML verb's output rows bin-packed (_optimize_write):
+        they can hold no more than the ``rewritten`` files (their
+        logged sizes) plus the ``source`` a MERGE brings in (its plan
+        estimate), so that sum bounds the bin count."""
+        pb = self.partition_columns()
+        src_bytes = self._plan_bytes(source) if source is not None else None
+        bound = self._bytes_of(rewritten) + (src_bytes or 0)
+        return self._stage_files(
+            self._optimize_write(df, pb, bound),
+            partition_by=pb,
+            mapping=mapping,
+        )
 
     def auto_compact(self, spark) -> int | None:
         """delta.autoOptimize.autoCompact (delta-spark's auto
@@ -5505,7 +5575,7 @@ class DeltaLogTable(_CheckpointMixin):
         # stays logical-schema-only (CDF does not publish lineage)
         kept = affected.filter(~F.col("__match")).drop("__match")
         deleted = affected.filter(F.col("__match")).drop("__match", *(rt or ()))
-        adds = self._stage_files(kept, partition_by=self.partition_columns())
+        adds = self._stage_rewrite(kept, [snap[p] for p in hit_files])
         cdc_actions = self._stage_cdc(
             deleted.withColumn("_change_type", F.lit("delete"))
         )
@@ -5540,71 +5610,19 @@ class DeltaLogTable(_CheckpointMixin):
             )
         return v
 
-    @_occ_retry
-    def delete_where_dv(self, spark, predicate_sql: str) -> int:
-        """Row-level DELETE via DELETION VECTORS — merge-on-read, the
-        modern Delta DML path (protocol feature `deletionVectors`)
-        next to [delete_where]'s copy-on-write: NO data file is
-        rewritten; each affected file's matching row POSITIONS are
-        serialized into a roaring-bitmap DV file (the public format —
-        roaring.py) and one commit swaps the file's add action for an
-        identical one carrying the deletionVector descriptor (remove
-        then re-add, same path, same bytes on disk). Readers drop the
-        positions at scan time. A second DV delete on the same file
-        UNIONS into a fresh DV (the old add's descriptor rides its
-        remove action, per spec). cdc publishes the deleted rows, so
-        CDF consumers see exactly what vanished.
-
-        Why it matters at 100 TB: deleting 100 rows from a 1 GB file
-        costs KBs of DV instead of a 1 GB rewrite — DELETE latency
-        tracks matches, not file sizes; OPTIMIZE later purges DVs by
-        rewriting through the DV-aware read. Conflict check is
-        STRICTER than file liveness: the precondition re-validates
-        each planned file's DV descriptor is unchanged, so two
-        concurrent DV deletes can't silently drop each other's
-        positions."""
-        self._forbid_append_only("DELETE (deletion vectors)")
-        from deltasink_spark import roaring
-
-        adds = self.snapshot_adds()
-        if not adds:
-            return self.latest_version()
-        # table-features protocol upgrade (Delta's auto-upgrade on the
-        # first DV write): deletionVectors requires minReaderVersion 3
-        # / minWriterVersion 7 with the feature listed both sides
-        proto = self._protocol_dict()
-        upgrade: list[dict] = []
-        if "deletionVectors" not in (proto or {}).get("readerFeatures", []):
-            # ADDITIVE upgrade: a wholesale protocol replacement here
-            # would erase features other enablers ledgered
-            # (v2Checkpoint, domainMetadata, ICT...) and deactivate
-            # the legacy versions' implied capabilities
-            upgrade.append(
-                {
-                    "protocol": self._upgraded_protocol(
-                        reader_features=("deletionVectors",),
-                        writer_features=("deletionVectors",),
-                    )
-                }
-            )
-        full = self._read_adds(spark, adds, with_lineage=True)
-        # pin the matched rows ONCE: the positions that go into the DV
-        # files and the rows the cdc action publishes must come from
-        # the same evaluation, or a nondeterministic predicate desyncs
-        # CDF consumers from the table
-        matched = full.filter(F.expr(predicate_sql)).localCheckpoint()
-        # DV construction is EXECUTOR-SIDE (r10 verdict wrong #2): each
-        # affected file's positions are grouped, unioned with the
-        # file's existing DV, serialized, and written to table storage
-        # inside ONE applyInPandas over __file — the driver receives
-        # only O(files-touched) descriptors, never the position lists,
-        # so a wide DELETE's millions of matched rows stay distributed
-        # exactly like real Delta's DV writer. A crash after the write
-        # leaves unreferenced DV files — invisible, VACUUM-reclaimed.
+    def _write_dvs(self, matched: DataFrame, adds: dict[str, dict]) -> list:
+        """Write one deletion vector per file of the pinned ``matched``
+        frame (its (__file, __pos) lineage) and return one row per
+        touched file: (file basename, DV path encoding, offset, size,
+        cardinality). DV construction is EXECUTOR-SIDE: each file's
+        positions are grouped, unioned with the file's existing DV
+        from ``adds``, serialized and written to table storage inside
+        ONE applyInPandas over __file — the driver receives only
+        O(files-touched) descriptors, never the position lists, so a
+        wide DELETE's millions of matched rows stay distributed
+        exactly like real Delta's DV writer. A crash after the write
+        leaves unreferenced DV files — invisible, VACUUM-reclaimed."""
         table_path = self.path
-        # ambiguity check BEFORE the UDF keys on basenames (and the
-        # single map both the UDF prep and the commit planning reuse)
-        rel_of_base = self._rel_of_base_map(adds)
         old_dvs = {
             self._basename_of_add_path(p): a["deletionVector"]
             for p, a in adds.items()
@@ -5648,7 +5666,7 @@ class DeltaLogTable(_CheckpointMixin):
                 ]
             )
 
-        hits = (
+        return (
             matched.groupBy("__file")
             .applyInPandas(
                 _build_dv,
@@ -5656,12 +5674,20 @@ class DeltaLogTable(_CheckpointMixin):
             )
             .collect()
         )
-        if not hits:
-            return self.latest_version()
+
+    @staticmethod
+    def _dv_swap(
+        hits: list,
+        adds: dict[str, dict],
+        rel_of_base: dict[str, str],
+        now: int,
+    ) -> tuple[dict[str, dict], list[dict], list[dict]]:
+        """(planned adds, removes, re-adds) that swap each hit file's
+        add for an identical one carrying its new DV — same path, same
+        bytes on disk; the old descriptor rides the remove, per spec."""
         planned: dict[str, dict] = {}
-        new_adds: list[dict] = []
-        old_removes: list[dict] = []
-        now = _now_ms()
+        removes: list[dict] = []
+        readds: list[dict] = []
         for r in hits:
             rel = rel_of_base[r["file"]]
             old = adds[rel]
@@ -5669,7 +5695,7 @@ class DeltaLogTable(_CheckpointMixin):
             rm = {"path": rel, "deletionTimestamp": now, "dataChange": True}
             if old.get("deletionVector"):
                 rm["deletionVector"] = old["deletionVector"]
-            old_removes.append(rm)
+            removes.append(rm)
             na = dict(old)
             na["dataChange"] = True
             na["modificationTime"] = now
@@ -5680,7 +5706,69 @@ class DeltaLogTable(_CheckpointMixin):
                 "sizeInBytes": r["size"],
                 "cardinality": r["card"],
             }
-            new_adds.append(na)
+            readds.append(na)
+        return planned, removes, readds
+
+    @_occ_retry
+    def delete_where_dv(self, spark, predicate_sql: str) -> int:
+        """Row-level DELETE via DELETION VECTORS — merge-on-read, the
+        modern Delta DML path (protocol feature `deletionVectors`)
+        next to [delete_where]'s copy-on-write: NO data file is
+        rewritten; each affected file's matching row POSITIONS are
+        serialized into a roaring-bitmap DV file (the public format —
+        roaring.py) and one commit swaps the file's add action for an
+        identical one carrying the deletionVector descriptor (remove
+        then re-add, same path, same bytes on disk). Readers drop the
+        positions at scan time. A second DV delete on the same file
+        UNIONS into a fresh DV (the old add's descriptor rides its
+        remove action, per spec). cdc publishes the deleted rows, so
+        CDF consumers see exactly what vanished.
+
+        Why it matters at 100 TB: deleting 100 rows from a 1 GB file
+        costs KBs of DV instead of a 1 GB rewrite — DELETE latency
+        tracks matches, not file sizes; OPTIMIZE later purges DVs by
+        rewriting through the DV-aware read. Conflict check is
+        STRICTER than file liveness: the precondition re-validates
+        each planned file's DV descriptor is unchanged, so two
+        concurrent DV deletes can't silently drop each other's
+        positions."""
+        self._forbid_append_only("DELETE (deletion vectors)")
+        adds = self.snapshot_adds()
+        if not adds:
+            return self.latest_version()
+        # table-features protocol upgrade (Delta's auto-upgrade on the
+        # first DV write): deletionVectors requires minReaderVersion 3
+        # / minWriterVersion 7 with the feature listed both sides
+        proto = self._protocol_dict()
+        upgrade: list[dict] = []
+        if "deletionVectors" not in (proto or {}).get("readerFeatures", []):
+            # ADDITIVE upgrade: a wholesale protocol replacement here
+            # would erase features other enablers ledgered
+            # (v2Checkpoint, domainMetadata, ICT...) and deactivate
+            # the legacy versions' implied capabilities
+            upgrade.append(
+                {
+                    "protocol": self._upgraded_protocol(
+                        reader_features=("deletionVectors",),
+                        writer_features=("deletionVectors",),
+                    )
+                }
+            )
+        full = self._read_adds(spark, adds, with_lineage=True)
+        # pin the matched rows ONCE: the positions that go into the DV
+        # files and the rows the cdc action publishes must come from
+        # the same evaluation, or a nondeterministic predicate desyncs
+        # CDF consumers from the table
+        matched = full.filter(F.expr(predicate_sql)).localCheckpoint()
+        # ambiguity check BEFORE the DV writer keys on basenames
+        rel_of_base = self._rel_of_base_map(adds)
+        hits = self._write_dvs(matched, adds)
+        if not hits:
+            return self.latest_version()
+        now = _now_ms()
+        planned, old_removes, new_adds = self._dv_swap(
+            hits, adds, rel_of_base, now
+        )
         deleted = matched.drop("__file", "__pos")
         cdc_actions = self._stage_cdc(
             deleted.withColumn("_change_type", F.lit("delete"))
@@ -5765,8 +5853,6 @@ class DeltaLogTable(_CheckpointMixin):
         fresh commit version. Concurrency: each planned file's
         (path, DV descriptor) is re-validated under the lock."""
         self._forbid_append_only("UPDATE (deletion vectors)")
-        from deltasink_spark import roaring  # noqa: F401 (dv path dep)
-
         snap = self.snapshot_adds()
         if not snap:
             return self.latest_version()
@@ -5809,57 +5895,9 @@ class DeltaLogTable(_CheckpointMixin):
         # pin the matched rows ONCE: DV positions, CDF preimage and the
         # post rows must come from the same evaluation
         matched = full.filter(F.expr(predicate_sql)).localCheckpoint()
+        # ambiguity check BEFORE the DV writer keys on basenames
         rel_of_base = self._rel_of_base_map(snap)
-        old_dvs = {
-            self._basename_of_add_path(p): a["deletionVector"]
-            for p, a in snap.items()
-            if a.get("deletionVector")
-        }
-        table_path = self.path
-
-        def _build_dv(pdf):
-            import pandas as pd
-
-            from deltasink_spark import roaring as _r
-
-            base = pdf["__file"].iloc[0]
-            pos = set(int(x) for x in pdf["__pos"])
-            old_desc = old_dvs.get(base)
-            if old_desc:
-                old_fp = (
-                    old_desc["pathOrInlineDv"]
-                    if old_desc["storageType"] == "p"
-                    else os.path.join(
-                        table_path,
-                        _r.dv_relative_path(old_desc["pathOrInlineDv"]),
-                    )
-                )
-                pos |= _r.read_dv_file(
-                    old_fp, old_desc["offset"], old_desc["sizeInBytes"]
-                )
-            merged = sorted(pos)
-            enc, dv_rel = _r.new_dv_descriptor_path()
-            desc = _r.write_dv_file(os.path.join(table_path, dv_rel), merged)
-            return pd.DataFrame(
-                [
-                    {
-                        "file": base,
-                        "enc": enc,
-                        "offset": desc["offset"],
-                        "size": desc["sizeInBytes"],
-                        "card": len(merged),
-                    }
-                ]
-            )
-
-        hits = (
-            matched.groupBy("__file")
-            .applyInPandas(
-                _build_dv,
-                "file string, enc string, offset int, size int, card long",
-            )
-            .collect()
-        )
+        hits = self._write_dvs(matched, snap)
         if not hits:
             return self.latest_version()
         pre = matched.drop("__file", "__pos")
@@ -5883,9 +5921,9 @@ class DeltaLogTable(_CheckpointMixin):
             post = post.withColumn(gname, F.expr(gexpr))
         post = post.localCheckpoint()
         self._enforce_constraints(post)
-        adds_new = self._stage_files(
+        adds_new = self._stage_rewrite(
             post.select(*(cols + list(rt or ()))),
-            partition_by=self.partition_columns(),
+            [snap[rel_of_base[r["file"]]] for r in hits],
         )
         cdc_actions = self._stage_cdc(
             pre.select(*cols)
@@ -5896,29 +5934,10 @@ class DeltaLogTable(_CheckpointMixin):
                 )
             )
         )
-        planned: dict[str, dict] = {}
-        old_removes: list[dict] = []
-        dv_adds: list[dict] = []
         now = _now_ms()
-        for r in hits:
-            rel = rel_of_base[r["file"]]
-            old = snap[rel]
-            planned[rel] = old
-            rm = {"path": rel, "deletionTimestamp": now, "dataChange": True}
-            if old.get("deletionVector"):
-                rm["deletionVector"] = old["deletionVector"]
-            old_removes.append(rm)
-            na = dict(old)
-            na["dataChange"] = True
-            na["modificationTime"] = now
-            na["deletionVector"] = {
-                "storageType": "u",
-                "pathOrInlineDv": r["enc"],
-                "offset": r["offset"],
-                "sizeInBytes": r["size"],
-                "cardinality": r["card"],
-            }
-            dv_adds.append(na)
+        planned, old_removes, dv_adds = self._dv_swap(
+            hits, snap, rel_of_base, now
+        )
         actions = upgrade + cdc_actions
         actions += [{"remove": rm} for rm in old_removes]
         actions += [{"add": a} for a in dv_adds]
@@ -6074,9 +6093,9 @@ class DeltaLogTable(_CheckpointMixin):
         post = post.localCheckpoint()
         self._enforce_constraints(post)
         stage_cols = cols + list(rt or ())
-        adds = self._stage_files(
+        adds = self._stage_rewrite(
             kept.select(*stage_cols).unionByName(post.select(*stage_cols)),
-            partition_by=self.partition_columns(),
+            [snap[p] for p in hit_files],
         )
         cdc_actions = self._stage_cdc(
             pre.select(*cols)
@@ -6107,9 +6126,7 @@ class DeltaLogTable(_CheckpointMixin):
                         len(hit_files),
                         cdc_actions,
                         op="UPDATE",
-                        # post is localCheckpoint'd — counting the
-                        # materialized partitions is O(matched), cheap
-                        clause_counts={"update_postimage": post.count()},
+                        clause_counts=self._cdc_counts(cdc_actions),
                     ),
                 }
             }
@@ -6211,7 +6228,9 @@ class DeltaLogTable(_CheckpointMixin):
             )
         rel_of_base = self._rel_of_base_map(snap)
         target = self._read_adds(spark, snap, with_lineage=True)
-        keys = F.broadcast(src.select(key).distinct())
+        # the duplicate-key check above makes the source keys distinct:
+        # no aggregation (and its shuffle) in front of each broadcast
+        keys = F.broadcast(src.select(key))
         hit_files = [
             rel_of_base[r[0]]
             for r in target.select(F.col(key), F.col("__file"))
@@ -6232,8 +6251,11 @@ class DeltaLogTable(_CheckpointMixin):
                 affected = affected.withColumn(c, F.lit(None).cast("long"))
         kept = affected.join(src.select(key), key, "left_anti")
         preimage = affected.join(src.select(key), key, "left_semi")
-        updated = src.join(target.select(key), key, "left_semi")
-        inserted = src.join(target.select(key), key, "left_anti")
+        # every live row whose key is in the source sits in a hit file,
+        # so the hit files' keys decide updated vs inserted — no second
+        # scan of the whole table
+        updated = src.join(affected.select(key), key, "left_semi")
+        inserted = src.join(affected.select(key), key, "left_anti")
         ids = self.identity_columns()
         id_meta = None
         id_base = None
@@ -6312,11 +6334,12 @@ class DeltaLogTable(_CheckpointMixin):
                     for f in wf
                 }
         stage_cols = cols + list(rt or ())
-        adds = self._stage_files(
+        adds = self._stage_rewrite(
             kept.select(*stage_cols)
             .unionByName(updated.select(*stage_cols))
             .unionByName(inserted.select(*stage_cols)),
-            partition_by=self.partition_columns(),
+            [snap[p] for p in hit_files],
+            src,
             mapping=stage_mapping,
         )
         cdc_frame = (
@@ -6332,7 +6355,6 @@ class DeltaLogTable(_CheckpointMixin):
             )
         )
         cdc_actions = self._stage_cdc(cdc_frame, mapping=stage_mapping)
-        clause_counts = self._cdc_clause_counts(cdc_frame)
         now = _now_ms()
         actions = cdc_actions + [{"add": a} for a in adds]
         if evolved_meta is not None:
@@ -6355,7 +6377,7 @@ class DeltaLogTable(_CheckpointMixin):
                         len(hit_files),
                         cdc_actions,
                         op="MERGE",
-                        clause_counts=clause_counts,
+                        clause_counts=self._cdc_counts(cdc_actions),
                     ),
                 }
             }
@@ -6425,8 +6447,17 @@ class DeltaLogTable(_CheckpointMixin):
         (Delta's multi-match refusal); identity columns stay immutable
         on updates and mint fresh values on inserts; generated columns
         recompute; CHECK constraints gate every written row; row ids
-        survive updates and keeps. Scale: cost tracks matched files +
-        source size — the unmatched bulk is untouched metadata."""
+        survive updates and keeps.
+
+        Scale: cost tracks matched files + source size — the unmatched
+        bulk is untouched metadata. The table is scanned once, by the
+        stats-pruned semi-join that finds the hit files; those are
+        read once and pinned, and inserts are the source keys absent
+        from them (every live row with a source key sits in a hit
+        file). The staged rows are bin-packed (_optimize_write), so a
+        merge adds ceil(bytes / binSize) files, or one per touched
+        partition, however many tasks fed them, and the clause counts
+        come from the cdc file it wrote (_cdc_counts)."""
         self._forbid_append_only("MERGE")
         snap = self.snapshot_adds()
         if not snap:
@@ -6485,7 +6516,9 @@ class DeltaLogTable(_CheckpointMixin):
         )
         if rt:
             full = self._with_row_lineage(spark, snap, full, *rt)
-        keys = F.broadcast(src.select(key).distinct())
+        # the duplicate-key check above makes the source keys distinct:
+        # no aggregation (and its shuffle) in front of each broadcast
+        keys = F.broadcast(src.select(key))
         nbs = not_matched_by_source_delete_condition
         # files to rewrite: those holding a matched key, plus (for the
         # by-source clause) those holding a retire candidate
@@ -6501,7 +6534,6 @@ class DeltaLogTable(_CheckpointMixin):
             )
             matched_files = matched_files.union(nbs_files).distinct()
         hit_files = [rel_of_base[r[0]] for r in matched_files.collect()]
-        target_keys = full.select(key).distinct()
         if not hit_files:
             affected = full.limit(0)
         else:
@@ -6566,7 +6598,10 @@ class DeltaLogTable(_CheckpointMixin):
         id_base = None
         ins_high: dict[str, int] = {}
         if not_matched_insert:
-            inserted = src.join(target_keys, key, "left_anti")
+            # every live row whose key is in the source sits in a hit
+            # file: the pinned hit files decide what is new, not a
+            # second scan of the whole table
+            inserted = src.join(affected.select(key), key, "left_anti")
             if not_matched_insert_condition is not None:
                 inserted = inserted.filter(
                     _cond(not_matched_insert_condition)
@@ -6594,7 +6629,7 @@ class DeltaLogTable(_CheckpointMixin):
             .unionByName(post.select(*tcols))
             .unionByName(inserted.select(*tcols))
         )
-        adds = self._stage_files(staged, partition_by=self.partition_columns())
+        adds = self._stage_rewrite(staged, [snap[p] for p in hit_files], src)
         cdc_frame = (
             to_update.select(*cols)
             .withColumn("_change_type", F.lit("update_preimage"))
@@ -6648,7 +6683,7 @@ class DeltaLogTable(_CheckpointMixin):
                         len(hit_files),
                         cdc_actions,
                         op="MERGE",
-                        clause_counts=self._cdc_clause_counts(cdc_frame),
+                        clause_counts=self._cdc_counts(cdc_actions),
                     ),
                 }
             }
@@ -6784,12 +6819,13 @@ class DeltaLogTable(_CheckpointMixin):
             return self.latest_version()  # nothing changed: no-op
         self._enforce_constraints(closed.select(*cols))
         self._enforce_constraints(opened.unionByName(inserted))
-        adds = self._stage_files(
+        adds = self._stage_rewrite(
             kept.select(*cols)
             .unionByName(closed.select(*cols))
             .unionByName(opened)
             .unionByName(inserted),
-            partition_by=self.partition_columns(),
+            [snap[p] for p in hit_files],
+            src,
         )
         cdc_frame = (
             to_close.select(*cols)
@@ -6807,7 +6843,6 @@ class DeltaLogTable(_CheckpointMixin):
             )
         )
         cdc_actions = self._stage_cdc(cdc_frame)
-        clause_counts = self._cdc_clause_counts(cdc_frame)
         now = _now_ms()
         actions = cdc_actions + [{"add": a} for a in adds]
         actions += [
@@ -6829,7 +6864,7 @@ class DeltaLogTable(_CheckpointMixin):
                         len(hit_files),
                         cdc_actions,
                         op="MERGE",
-                        clause_counts=clause_counts,
+                        clause_counts=self._cdc_counts(cdc_actions),
                     ),
                 }
             }
@@ -8303,14 +8338,15 @@ class DeltaLogTable(_CheckpointMixin):
         tail: a same-path re-add (DV swap, RESTORE) points at the same
         immutable bytes, so checkpointed bounds remain valid bounds;
         a new tail-staged file simply isn't in the checkpoint."""
-        cv = self.last_checkpoint()
-        if cv is None:
+        info = self._last_checkpoint_info()
+        if info is None:
             return {}
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         out: dict[str, bool] = {}
-        for part in self._checkpoint_file_action_paths(cv):
+        tops = self._checkpoint_paths(int(info["version"]), info)
+        for part in self._checkpoint_file_action_paths(tops):
             try:
                 t = pq.read_table(
                     part,

@@ -324,3 +324,95 @@ def test_dv_wide_delete_builds_executor_side(spark, tmp_path):
     assert superseded >= 1  # only files containing matches re-DV'd
     orphans = t.vacuum(0, force=True)
     assert orphans == superseded  # exactly the superseded DV files
+
+
+def _eight_file_table(spark, path, partition_by=()):
+    """800 rows in 8 round-robin files (per partition when
+    ``partition_by`` is set), so every id range spans every file."""
+    t = DeltaLogTable(path)
+    df = spark.range(800).repartition(8).select(
+        F.col("id").alias("event_id"),
+        (F.col("id") % 7).alias("user_id"),
+        (F.col("id") * 1.5).alias("value"),
+        (F.col("id") % 3).alias("part"),
+    )
+    t.append(df, partition_by=partition_by)
+    return t
+
+
+def _new_adds(before, after):
+    return [a for p, a in after.items() if p not in before]
+
+
+def test_dml_output_is_bin_packed(spark, tmp_path):
+    """A DML verb that touches all 8 files of an unpartitioned table
+    adds ONE file, not one per upstream task: merge_when and the
+    copy-on-write verbs rewrite the 8 into one, update_where_dv writes
+    its post rows as one."""
+    t = _eight_file_table(spark, str(tmp_path / "m"))
+    before = t.snapshot_adds()
+    assert len(before) == 8
+    src = spark.range(0, 800, 10).select(
+        F.col("id").alias("event_id"),
+        F.lit(-1).cast("bigint").alias("user_id"),
+        F.lit(0.0).alias("value"),
+        (F.col("id") % 3).alias("part"),
+    ).union(spark.createDataFrame(
+        [(900, 1, 9.0, 0)], "event_id bigint, user_id bigint, value double, part bigint"
+    ))
+    t.merge_when(spark, src, "event_id",
+                 matched_update={"user_id": "src_user_id", "value": "src_value"})
+    after = t.snapshot_adds()
+    assert set(before).isdisjoint(after)  # every file was rewritten
+    assert len(_new_adds(before, after)) == 1
+    rows = {r["event_id"]: r["user_id"] for r in t.read(spark).collect()}
+    assert len(rows) == 801 and rows[10] == -1 and rows[11] == 4 and rows[900] == 1
+
+    for name, verb, n_rows in (
+        ("dv", lambda u: u.update_where_dv(spark, {"value": "value + 1"}, "user_id = 3"), 800),
+        ("cow", lambda u: u.update_where(spark, {"value": "value + 1"}, "user_id = 3"), 800),
+        ("del", lambda u: u.delete_where(spark, "user_id = 3"), 800 - 114),
+    ):
+        u = _eight_file_table(spark, str(tmp_path / name))
+        u.set_properties({"delta.enableDeletionVectors": "true"})
+        before = u.snapshot_adds()
+        verb(u)
+        after = u.snapshot_adds()
+        touched = [p for p in before
+                   if p not in after or after[p].get("deletionVector")]
+        assert len(touched) == 8, name
+        assert len(_new_adds(before, after)) == 1, name
+        assert u.read(spark).count() == n_rows, name
+    got = {r["event_id"]: r["value"] for r in DeltaLogTable(
+        str(tmp_path / "dv")).read(spark).collect()}
+    assert len(got) == 800 and got[3] == 5.5 and got[4] == 6.0
+
+
+def test_dml_output_is_bin_packed_per_partition(spark, tmp_path):
+    """On a partitioned table each DML verb adds at most one file per
+    partition it touches."""
+    t = _eight_file_table(spark, str(tmp_path / "m"), partition_by=("part",))
+    before = t.snapshot_adds()
+    assert len(before) == 24
+    src = spark.range(0, 800, 10).select(
+        F.col("id").alias("event_id"),
+        F.lit(-1).cast("bigint").alias("user_id"),
+        F.lit(0.0).alias("value"),
+        (F.col("id") % 3).alias("part"),
+    )
+    t.merge_when(spark, src, "event_id",
+                 matched_update={"user_id": "src_user_id"})
+    new = _new_adds(before, t.snapshot_adds())
+    parts = [a["partitionValues"]["part"] for a in new]
+    assert sorted(parts) == ["0", "1", "2"]
+    assert t.read(spark).filter("user_id = -1").count() == 80
+
+    u = _eight_file_table(spark, str(tmp_path / "u"), partition_by=("part",))
+    u.set_properties({"delta.enableDeletionVectors": "true"})
+    before = u.snapshot_adds()
+    u.update_where_dv(spark, {"value": "value + 1"}, "user_id = 3 AND part < 2")
+    new = _new_adds(before, u.snapshot_adds())
+    parts = [a["partitionValues"]["part"] for a in new]
+    assert sorted(parts) == ["0", "1"]
+    assert u.read(spark).filter("value = event_id * 1.5 + 1").count() == \
+        spark.range(800).filter("id % 7 = 3 AND id % 3 < 2").count()

@@ -5443,3 +5443,71 @@ def test_empty_append_commits_no_data_file(spark, tmp_path):
         [f for f in os.listdir(t.path) if f.endswith(".parquet")]
     )
     assert t.read(spark).count() == 100
+
+
+def test_merge_when_spark_job_count(spark, tmp_path):
+    """A merge_when scans the table once, to find the hit files, and
+    runs a bounded number of Spark jobs: no second full-table scan for
+    the inserts and no re-run of the change plan for its metrics."""
+    import uuid as _uuid
+
+    t = _table(tmp_path)
+    t.append(_ev(spark, 800).repartition(8))
+    src = spark.createDataFrame(
+        [(i, 1, 0.0) for i in range(0, 800, 50)] + [(900, 2, 5.0)],
+        "event_id bigint, user_id bigint, value double",
+    )
+    sc = spark.sparkContext
+    group = f"merge-{_uuid.uuid4().hex}"
+    sc.setJobGroup(group, "merge_when")
+    try:
+        assert t.merge_when(
+            spark, src, "event_id", matched_update={"value": "src_value"}
+        ) == 1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # 17 on Spark 4.1 with AQE: a second full-table scan for the
+    # inserts, a re-run of the change plan for the clause counts or a
+    # distinct over the already-unique source keys adds jobs
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 17
+    assert t.read(spark).count() == 801
+
+
+def test_merge_when_metrics_match_change_feed(spark, tmp_path):
+    """MERGE's numTargetRowsInserted/Updated/Deleted equal the rows per
+    _change_type the same version publishes in the change feed, with
+    all four clauses firing."""
+    t = _table(tmp_path)
+    t.append(_ev(spark, 100).repartition(4))
+    src = spark.createDataFrame(
+        [(i, 0, -1.0) for i in range(0, 40, 2)]
+        + [(i, 0, -2.0) for i in range(200, 205)],
+        "event_id bigint, user_id bigint, value double",
+    )
+    v = t.merge_when(
+        spark,
+        src,
+        "event_id",
+        matched_update={"value": "src_value"},
+        matched_delete_condition="event_id < 10",
+        not_matched_by_source_delete_condition="event_id >= 90",
+    )
+    m = next(
+        a["commitInfo"]["operationMetrics"]
+        for ver, a in t._exact_commit_actions()
+        if ver == v and "commitInfo" in a
+    )
+    counts = {
+        r["_change_type"]: r["count"]
+        for r in t.read_changes(spark, v - 1, v).groupBy("_change_type").count().collect()
+    }
+    assert counts == {
+        "delete": 5 + 10,  # 0,2,..,8 matched; 90..99 not matched by source
+        "update_preimage": 15,
+        "update_postimage": 15,
+        "insert": 5,
+    }
+    assert int(m["numTargetRowsInserted"]) == counts["insert"]
+    assert int(m["numTargetRowsUpdated"]) == counts["update_postimage"]
+    assert int(m["numTargetRowsDeleted"]) == counts["delete"]
+    assert t.read(spark).count() == 100 - 15 + 5
