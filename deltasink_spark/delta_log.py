@@ -149,6 +149,10 @@ _MAX_WRITER_VERSION = 7
 _LOG_DIR = "_delta_log"
 _CDC_DIR = "_change_data"
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+# Hadoop's FileOutputCommitter option for the job-level _SUCCESS file; a
+# write option reaches only that write's Hadoop conf. Staging dirs are
+# deleted right after the write, so nothing reads the marker there.
+_SUCCESS_MARKER_OPTION = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
 
 
 class MetadataChangedError(RuntimeError):
@@ -2580,7 +2584,10 @@ class DeltaLogTable(_CheckpointMixin):
         from data), and no Spark job beyond the write itself. Only a
         file pyarrow cannot open (a VARIANT column) falls back to a
         Spark agg grouped by _metadata.file_path. A file of 0 rows is
-        deleted and gets no add: an empty frame stages nothing.
+        deleted and gets no add: an empty frame stages nothing. The
+        staging write leaves no _SUCCESS marker (the dir is removed
+        right after; without libhadoop each file Hadoop creates on
+        file: forks a chmod for itself and its .crc).
 
         COLUMN MAPPING: on a mapped table the parquet files carry
         PHYSICAL column names (the spec's contract — renames never
@@ -2623,7 +2630,7 @@ class DeltaLogTable(_CheckpointMixin):
                 ]
             )
         tmp = os.path.join(self.path, f"tmp_stage_{uuid.uuid4().hex}")
-        w = df.write.mode("overwrite")
+        w = df.write.mode("overwrite").option(_SUCCESS_MARKER_OPTION, "false")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(tmp)
@@ -2784,7 +2791,9 @@ class DeltaLogTable(_CheckpointMixin):
             )
         os.makedirs(os.path.join(self.path, _CDC_DIR), exist_ok=True)
         tmp = os.path.join(self.path, f"tmp_cdc_{uuid.uuid4().hex}")
-        frame.coalesce(1).write.mode("overwrite").parquet(tmp)
+        frame.coalesce(1).write.mode("overwrite").option(
+            _SUCCESS_MARKER_OPTION, "false"
+        ).parquet(tmp)
         actions = []
         for f in sorted(os.listdir(tmp)):
             if f.startswith("part-") and f.endswith(".parquet"):
@@ -5000,9 +5009,13 @@ class DeltaLogTable(_CheckpointMixin):
             }
             stage_mapping = {n: p for n, (_i, p) in cm_mint.items()}
             stage_field_ids = {p: i for _n, (i, p) in cm_mint.items()}
-        if (
+        if (app_id is not None and txn_version is not None) or (
             (self._metadata_dict() or {}).get("configuration") or {}
         ).get("delta.autoOptimize.optimizeWrite") == "true":
+            # a txn-keyed append is a streaming micro-batch commit: one
+            # bin-packed file (per touched partition) instead of one
+            # per upstream shuffle task, so each commit's fixed file
+            # cost stays constant
             df = self._optimize_write(df, tuple(partition_by))
         adds = self._stage_files(
             df,
@@ -5353,15 +5366,17 @@ class DeltaLogTable(_CheckpointMixin):
         the fewest tasks and ~binSize files, exactly the adaptive
         shuffle delta-spark injects before the write.
 
-        The row-level DML verbs (delete_where, update_where,
-        update_where_dv, merge, merge_when and merge_scd2) bin-pack
-        their staged rows through it (_stage_rewrite) whatever the
-        property says, so each adds ceil(bytes / binSize) files, or
-        one per touched partition, instead of one per upstream task.
-        They pass ``bound_bytes``: the logged size of the files they
-        rewrite, plus the source's estimate for a MERGE. It caps
-        Catalyst's estimate and stands in for an unknown one; an
-        append passes none."""
+        Whatever the property says, two kinds of write bin-pack
+        through it, so each adds ceil(bytes / binSize) files, or one
+        per touched partition, instead of one per upstream task:
+        txn-keyed appends (every DeltaLogSink / foreachBatch
+        micro-batch commit) and the row-level DML verbs (delete_where,
+        update_where, update_where_dv, merge, merge_when and
+        merge_scd2, through _stage_rewrite). The DML verbs pass
+        ``bound_bytes``: the logged size of the files they rewrite,
+        plus the source's estimate for a MERGE. It caps Catalyst's
+        estimate and stands in for an unknown one; an append passes
+        none."""
         cfg = (self._metadata_dict() or {}).get("configuration") or {}
         bin_size = int(
             cfg.get(
@@ -8483,7 +8498,10 @@ class DeltaLogSink:
     """foreachBatch adapter: exactly-once streaming append into a
     DeltaLogTable via `txn {appId, version=batch_id}` actions (the
     replay guard sinks.py implements with its bespoke ledger, here in
-    the public format). Writes a parquet CHECKPOINT every
+    the public format). Each commit is bin-packed: a txn-keyed append
+    goes through the optimized-write shuffle (_optimize_write), so a
+    micro-batch adds one file, or one per touched partition, however
+    many tasks produced it. Writes a parquet CHECKPOINT every
     ``checkpoint_interval`` commits — delta-spark's own cadence (10) —
     so a long-lived stream's log folds stay bounded (the txn replay
     check reads the checkpoint + tail, never the whole history)."""

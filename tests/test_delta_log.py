@@ -5445,6 +5445,78 @@ def test_empty_append_commits_no_data_file(spark, tmp_path):
     assert t.read(spark).count() == 100
 
 
+def _staged_files_spy(monkeypatch) -> list[list[str]]:
+    """Record, for each staging dir staging removes, the files left in
+    it at that moment."""
+    import shutil
+
+    seen: list[list[str]] = []
+    rmtree = shutil.rmtree
+
+    def spy(path, *a, **k):
+        if os.path.basename(str(path)).startswith("tmp_stage_"):
+            seen.append([f for _, _, files in os.walk(path) for f in files])
+        return rmtree(path, *a, **k)
+
+    monkeypatch.setattr(shutil, "rmtree", spy)
+    return seen
+
+
+def _added_files(t: DeltaLogTable, version: int) -> list[dict]:
+    return [
+        json.loads(line)["add"]
+        for line in open(os.path.join(t.log_dir, f"{version:020d}.json"))
+        if '"add"' in line
+    ]
+
+
+def test_sink_commit_is_one_bin_packed_file(spark, tmp_path, monkeypatch):
+    """A DeltaLogSink micro-batch of four upstream tasks commits ONE
+    file holding every record, and staging writes no _SUCCESS marker
+    and leaves no staging dir behind."""
+    staged = _staged_files_spy(monkeypatch)
+    sink = DeltaLogSink(str(tmp_path / "sink"), app_id="bin")
+    frame = _ev(spark, 4000).repartition(4)
+    assert frame.rdd.getNumPartitions() == 4
+    assert sink.write_batch(frame, 0)
+    adds = _added_files(sink.table, 0)
+    assert len(adds) == 1
+    assert json.loads(adds[0]["stats"])["numRecords"] == 4000
+    assert len(staged) == 1 and "_SUCCESS" not in staged[0]
+    left = [
+        os.path.join(d, f)
+        for d, dirs, files in os.walk(sink.table.path)
+        for f in files + dirs
+        if f == "_SUCCESS" or f.startswith("tmp_stage_")
+    ]
+    assert left == []
+    assert sink.table.read(spark).count() == 4000
+
+
+def test_partitioned_sink_commit_one_file_per_partition(spark, tmp_path):
+    """On a partitioned sink table each micro-batch adds at most one
+    file per partition it touches."""
+    sink = DeltaLogSink(str(tmp_path / "sink"), app_id="part")
+    by_user = _ev(spark, 4000).withColumn("p", F.col("user_id") % 3)
+    sink.table.append(by_user.limit(0), partition_by=("p",))
+    for batch in range(2):
+        frame = by_user.filter(F.col("event_id") % 2 == batch).repartition(4)
+        assert sink.write_batch(frame, batch)
+        adds = _added_files(sink.table, batch + 1)
+        parts = [a["partitionValues"]["p"] for a in adds]
+        assert sorted(parts) == ["0", "1", "2"]
+        assert sum(json.loads(a["stats"])["numRecords"] for a in adds) == 2000
+    assert sink.table.read(spark).count() == 4000
+
+
+def test_plain_append_keeps_per_task_files(spark, tmp_path):
+    """An append with no txn is not a streaming commit: without the
+    optimizeWrite property it keeps one file per upstream task."""
+    t = _table(tmp_path)
+    assert t.append(_ev(spark, 4000).repartition(4)) == 0
+    assert len(_added_files(t, 0)) == 4
+
+
 def test_merge_when_spark_job_count(spark, tmp_path):
     """A merge_when scans the table once, to find the hit files, and
     runs a bounded number of Spark jobs: no second full-table scan for

@@ -117,3 +117,13 @@ def test_local_profile_writes_checkpoints_through_filesystem(monkeypatch):
 def test_cluster_profile_keeps_the_default_checkpoint_manager(monkeypatch):
     monkeypatch.setenv("DS_LOCAL_PROFILE", "0")
     assert _CKPT_MANAGER_KEY not in _conf_passed(monkeypatch)
+
+
+def test_no_profile_swaps_the_local_filesystem(monkeypatch):
+    # Mapping file: to RawLocalFileSystem would skip the .crc files and
+    # their chmod forks, but SparkContext.hadoopFile (sc.textFile) calls
+    # FileSystem.getLocal, which casts the file: filesystem to
+    # LocalFileSystem: a ClassCastException on the raw class.
+    for profile in ("1", "0"):
+        monkeypatch.setenv("DS_LOCAL_PROFILE", profile)
+        assert "spark.hadoop.fs.file.impl" not in _conf_passed(monkeypatch)
